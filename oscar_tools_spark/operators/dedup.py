@@ -7,12 +7,13 @@ wins GLOBALLY across documents, order-preserving, and empty lines are
 deduplicated like any other key (dedup.rs:36-37 is dead code — see
 SURVEY.md §2.2). The reference does this with a single-node in-memory
 digest set; here the same semantics become a map-side-combinable
-``groupBy(key).agg(min(position))`` — the scale-out replacement for the
-O(corpus) driver-side set.
+``groupBy(key).agg(min_by(row, position))`` (:func:`_first_per_key`,
+shared by every lowest-key-wins dedup) — the scale-out replacement for
+the O(corpus) driver-side set.
 
 Scale notes
 -----------
-* ``groupBy + min(struct)`` partially aggregates before the shuffle, so
+* ``groupBy + min_by`` partially aggregates before the shuffle, so
   a line repeated 10^6 times ships one row per map partition, not 10^6
   rows — this also neutralizes key skew on ultra-common lines (empty
   string, boilerplate).
@@ -51,6 +52,31 @@ def _ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Dat
 # ----------------------------------------------------------------- exact
 
 
+def _first_per_key(
+    df: DataFrame, group_col: str, order_cols: list[str]
+) -> DataFrame:
+    """The dedup family's ONE lowest-key-wins rule: per ``group_col``
+    value, the row with the smallest ``order_cols`` tuple survives,
+    returned with the input schema.
+
+    A single ``min_by`` aggregate carrying the whole row: the input is
+    evaluated once and never joined back, and partial aggregation
+    combines a hot key map-side instead of sending it whole to one
+    task, which a window partition cannot do. Each order column
+    sorts nulls LAST (SQL ``min`` semantics: a non-null key beats a null
+    one); the order struct itself is never null, so a group whose keys
+    are all null still keeps exactly one real row. Rows tied on the
+    whole order tuple keep one of them."""
+    order = F.struct(
+        *[e for c in order_cols for e in (F.col(c).isNull(), F.col(c))]
+    )
+    return (
+        df.groupBy(group_col)
+        .agg(F.min_by(F.struct(*df.columns), order).alias("_first"))
+        .select("_first.*")
+    )
+
+
 def dedup_lines(
     df: DataFrame,
     order_cols: list[str],
@@ -67,13 +93,9 @@ def dedup_lines(
         *order_cols,
         F.posexplode(F.split(F.col(text_col), "\n")).alias("line_idx", line_col),
     )
-    pos = F.struct(*[F.col(c) for c in order_cols], F.col("line_idx")).alias("pos")
-    first = lines.groupBy(line_col).agg(F.min(pos).alias("pos"))
-    return first.select(
-        *[F.col(f"pos.{c}").alias(c) for c in order_cols],
-        F.col("pos.line_idx").alias("line_idx"),
-        line_col,
-    ).orderBy(*order_cols, "line_idx")
+    return _first_per_key(lines, line_col, [*order_cols, "line_idx"]).orderBy(
+        *order_cols, "line_idx"
+    )
 
 
 def dedup_paragraphs(
@@ -103,18 +125,12 @@ def dedup_paragraphs(
     Returns ``key_cols + [out_col (reassembled), n_paras,
     n_paras_kept]``.
 
-    Scale shape (r8): ONE posexplode -> one digest-keyed min-window
-    (first-occurrence test: a paragraph row survives iff its
-    (key, position) IS the min over its digest partition) -> one
-    doc-keyed reassembly agg. Two shuffles total, one Generate, no
+    Scale shape: ONE posexplode -> one digest-keyed first-occurrence
+    aggregate (:func:`_first_per_key`, map-side combinable, so a hot
+    boilerplate paragraph ships one partial row per map partition) ->
+    one doc-keyed reassembly agg. Two shuffles, one Generate, no
     driver collect; the reassembly HOF runs once per surviving doc
-    row, not in the exploded hot path. The r7 shape (digest min-agg
-    + winner semi-join back) ran the split+md5 Generate TWICE (two
-    shuffling consumers, exchange reuse broken by column pruning) and
-    shuffled the exploded text in the semi-join anyway, so the window
-    strictly removes one explode pass and one exchange (bench
-    dedup_paragraphs at sf0.1/32: see OPTIMIZATION_r08.md; plan:
-    2 Generate -> 1, digest agg + semi-join -> 1 Window)."""
+    row, not in the exploded hot path."""
     out_col = out_col or text_col
     split_arr = F.split(F.coalesce(F.col(text_col), F.lit("")), sep, -1)
     # n_paras rides the explode as a per-doc constant so no second
@@ -125,13 +141,7 @@ def dedup_paragraphs(
         F.posexplode("_parr").alias("_pidx", "_para"),
     )
     paras = staged.withColumn("_pd", F.md5(F.col("_para")))
-    pos = F.struct(*[F.col(c) for c in key_cols], F.col("_pidx"))
-    wd = Window.partitionBy("_pd")
-    kept = (
-        paras.withColumn("_w", F.min(pos).over(wd))
-        .filter(pos == F.col("_w"))
-        .drop("_w", "_pd")
-    )
+    kept = _first_per_key(paras, "_pd", [*key_cols, "_pidx"])
     return kept.groupBy(*key_cols).agg(
         F.array_join(
             F.transform(
@@ -148,19 +158,11 @@ def dedup_paragraphs(
 def dedup_docs_exact(
     df: DataFrame, key_cols: list[str], text_col: str = "text"
 ) -> DataFrame:
-    """Exact document dedup on md5(text); the doc with the smallest key
-    survives. Map-side-combinable groupBy, no window.
-
-    Null text digests as ``md5('')`` (null ≡ empty doc): ``md5(NULL)``
-    is NULL, and a bare digest would make the final ``left_semi``
-    equi-join silently erase EVERY null-text row — including the group
-    winner — because ``NULL = NULL`` never matches."""
-    digest = F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("_digest")
-    keyed = df.withColumn("_digest", digest)
-    winner = keyed.groupBy("_digest").agg(
-        F.min(F.struct(*key_cols)).alias("_w")
-    ).select("_digest", *[F.col(f"_w.{c}").alias(c) for c in key_cols])
-    return keyed.join(winner, ["_digest", *key_cols], "left_semi").drop("_digest")
+    """Exact document dedup on :func:`text_digest_expr` (null text ≡
+    empty doc); the doc with the smallest key survives
+    (:func:`_first_per_key`: one scan, one aggregate, no join)."""
+    keyed = df.withColumn("_digest", text_digest_expr(text_col))
+    return _first_per_key(keyed, "_digest", key_cols).drop("_digest")
 
 
 # --------------------------------------------------------------- shingles
@@ -391,16 +393,19 @@ def remove_boilerplate_lines(
 # ------------------------------------------------------- incremental dedup
 
 
+def text_digest_expr(text_col: str = "text") -> Column:
+    """The exact-dedup text digest, ``md5(coalesce(text, ''))``: null
+    text digests like the empty doc, because ``md5(NULL)`` is NULL and a
+    NULL digest matches nothing in an equi-join (the row could never be
+    dropped as seen, nor grouped with its duplicates)."""
+    return F.md5(F.coalesce(F.col(text_col), F.lit("")))
+
+
 def corpus_digests(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Fingerprint table of a corpus for incremental exact dedup: one
-    row per distinct ``md5(text_col)`` digest. 100 TB of text compresses
-    to ~32 bytes per distinct doc — the only state the next batch needs.
-    Null text digests as ``md5('')`` so the anti-join in
-    :func:`dedup_incremental` can actually match it (NULL digests match
-    nothing)."""
-    return df.select(
-        F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("digest")
-    ).distinct()
+    row per distinct :func:`text_digest_expr`. 100 TB of text compresses
+    to ~32 bytes per distinct doc — the only state the next batch needs."""
+    return df.select(text_digest_expr(text_col).alias("digest")).distinct()
 
 
 def dedup_incremental(
@@ -426,27 +431,10 @@ def dedup_incremental(
     uniform, skew-free); AQE broadcasts the digest side automatically
     when it is small.
     """
-    # coalesce: md5(NULL) is NULL, which the anti-join can never drop
-    # and the left_semi can never keep — null text digests as md5('')
-    keyed = new_df.withColumn(
-        "_digest", F.md5(F.coalesce(F.col(text_col), F.lit("")))
-    )
+    keyed = new_df.withColumn("_digest", text_digest_expr(text_col))
     seen = seen_digests.select(F.col(digest_col).alias("_digest")).distinct()
     fresh = keyed.join(seen, "_digest", "left_anti")
-    return _keep_doc_digest_winners(fresh, key_cols)
-
-
-def _keep_doc_digest_winners(fresh: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Within-batch first-occurrence rule on a ``_digest``-keyed frame
-    (smallest key_cols struct per digest wins) — ONE definition shared
-    by the digest-table and bloom-state incremental paths so their
-    survivors always compose."""
-    winner = (
-        fresh.groupBy("_digest")
-        .agg(F.min(F.struct(*key_cols)).alias("_w"))
-        .select("_digest", *[F.col(f"_w.{c}").alias(c) for c in key_cols])
-    )
-    return fresh.join(winner, ["_digest", *key_cols], "left_semi").drop("_digest")
+    return _first_per_key(fresh, "_digest", key_cols).drop("_digest")
 
 
 # ------------------------------------------------ bloom-compressed state
@@ -517,9 +505,7 @@ def digest_bloom_state(
     n_bits = int(n_bits)
     if n_bits < 64:
         raise ValueError(f"n_bits must be >= 64, got {n_bits}")
-    digs = df.select(
-        F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("_digest")
-    ).distinct()
+    digs = df.select(text_digest_expr(text_col).alias("_digest")).distinct()
     pos = digs.select(
         F.explode(
             F.array(
@@ -603,10 +589,7 @@ def dedup_incremental_bloom(
     if not meta:
         # empty state: nothing was ever seen — degenerate to the
         # within-batch rule (geometry is unknowable and irrelevant)
-        keyed = new_df.withColumn(
-            "_digest", F.md5(F.coalesce(F.col(text_col), F.lit("")))
-        )
-        return _keep_doc_digest_winners(keyed, key_cols)
+        return dedup_docs_exact(new_df, key_cols, text_col)
     stale = [r.bloom_version for r in meta if r.bloom_version != BLOOM_STATE_VERSION]
     if stale:
         raise ValueError(
@@ -630,9 +613,7 @@ def dedup_incremental_bloom(
             "one set-bit probe count twice toward the k-hit test)"
         )
     (n_bits, n_hashes), = geoms
-    keyed = new_df.withColumn(
-        "_digest", F.md5(F.coalesce(F.col(text_col), F.lit("")))
-    )
+    keyed = new_df.withColumn("_digest", text_digest_expr(text_col))
     digs = keyed.select("_digest").distinct()
     probes = digs.select(
         "_digest",
@@ -660,7 +641,7 @@ def dedup_incremental_bloom(
         .select("_digest")
     )
     fresh = keyed.join(hits, "_digest", "left_anti")
-    return _keep_doc_digest_winners(fresh, key_cols)
+    return _first_per_key(fresh, "_digest", key_cols).drop("_digest")
 
 
 # bump when the digest FORMULA changes: persisted --seen-digests state
@@ -763,14 +744,12 @@ def dedup_conversations_incremental(
 
 
 def _keep_digest_winners(df: DataFrame, digs: DataFrame, conv_col: str) -> DataFrame:
-    """ONE definition of the conversation-dedup winner rule (smallest
-    ``conv_col`` per digest, semi-join back to intact turn rows) —
-    shared by the full-corpus and incremental paths so a tie-break
-    change can never diverge them (their survivors must compose)."""
-    winner = (
-        digs.groupBy("digest").agg(F.min(conv_col).alias(conv_col)).select(conv_col)
-    )
-    return df.join(winner, conv_col, "left_semi")
+    """The conversation-dedup winner rule (:func:`_first_per_key`:
+    smallest ``conv_col`` per digest), semi-joined back to intact turn
+    rows — shared by the full-corpus and incremental paths so their
+    survivors compose."""
+    winner = _first_per_key(digs.select("digest", conv_col), "digest", [conv_col])
+    return df.join(winner.select(conv_col), conv_col, "left_semi")
 
 
 def dedup_conversations(
@@ -917,8 +896,7 @@ def dedup_simhash(df: DataFrame, key_col: str, text_col: str = "text") -> DataFr
     Banded hamming<=k matching is the scale-out extension (join on
     16-bit chunks); collision-only is the conservative default."""
     keyed = df.join(simhash_table(df, [key_col], text_col), key_col)
-    winner = keyed.groupBy("simhash").agg(F.min(key_col).alias(key_col))
-    return keyed.join(winner, ["simhash", key_col], "left_semi").drop("simhash")
+    return _first_per_key(keyed, "simhash", [key_col]).drop("simhash")
 
 
 # ------------------------------------------------- long-gram substring dedup

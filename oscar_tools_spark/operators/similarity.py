@@ -27,15 +27,14 @@ def _dot(x: Column, y: Column) -> Column:
     )
 
 
-def cosine_expr(x: Column, y: Column, dim: int | None = None) -> Column:
-    """Cosine as a column expression (interpreted HOF fold). ``dim`` is
-    accepted for signature compatibility and ignored: an r8 experiment
-    unrolled the fold into a flat 3*dim-term codegen expression and it
-    measured 2-4x SLOWER across every consumer (the giant expression
-    tree blows past the codegen method-size limits and falls back to
-    interpretation with no CSE across the repeated gets). For
-    many-candidate verification use :func:`cosine_pairs_udf` instead —
-    bit-identical values, vectorized across the batch."""
+def cosine_expr(x: Column, y: Column) -> Column:
+    """Cosine as a column expression (interpreted HOF fold). Unrolling
+    the fold into a flat 3*dim-term codegen expression measured 2-4x
+    SLOWER across every consumer (the giant expression tree blows past
+    the codegen method-size limits and falls back to interpretation
+    with no CSE across the repeated gets). For many-candidate
+    verification use :func:`cosine_pairs_udf` instead — bit-identical
+    values, vectorized across the batch."""
     return _dot(x, y) / (F.sqrt(_dot(x, x)) * F.sqrt(_dot(y, y)))
 
 
@@ -51,9 +50,9 @@ def cosine_pairs_udf():
     x_i * y_i), exactly the zip_with/aggregate sequential fold with its
     per-element double casts, and the final expression keeps the same
     dot / (sqrt(xx) * sqrt(yy)) order. NULL/ragged-length inputs yield
-    NaN (the expression form yields NULL; both fail a >= threshold
-    filter identically — do not use this variant in ordering contexts,
-    where Spark sorts NaN above every double but NULL last)."""
+    NULL, as in the expression form: the batch marks them NaN and the
+    pandas -> Arrow conversion writes NaN as null, so they fail a
+    ``>= threshold`` filter exactly like :func:`cosine_expr`."""
 
     @F.pandas_udf("double")
     def _cos(xs: pd.Series, ys: pd.Series) -> pd.Series:

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import text_digest_expr
+
 
 def corpus_diff(
     old: DataFrame,
@@ -45,11 +47,7 @@ def corpus_diff(
     map-side partial aggregation shrinks what moves.
     """
     dig = lambda df, name: (  # noqa: E731
-        df.groupBy(*key_cols).agg(
-            F.min(
-                F.md5(F.coalesce(F.col(text_col), F.lit("")))
-            ).alias(name)
-        )
+        df.groupBy(*key_cols).agg(F.min(text_digest_expr(text_col)).alias(name))
     )
     j = dig(old, "_old").join(dig(new, "_new"), on=key_cols, how="full_outer")
     status = (

@@ -13,11 +13,11 @@ filters the input once per bucket reads the FULL input n_buckets times
 (at 100 TB with 16 buckets: 1.6 PB of scan to write 100 TB). The
 default path therefore writes ALL not-yet-done buckets in ONE job via
 ``partitionBy`` with dynamic partition overwrite, and derives the
-manifest records from the committed partition listing. The per-bucket
-loop survives only as the explicit retry path (``per_bucket=True``)
-for isolating a poisoned bucket, and ``buckets_per_pass`` offers the
-middle ground — commit granularity of k buckets at a scan cost of
-ceil(todo/k) passes.
+manifest records from the committed partition listing.
+``buckets_per_pass`` trades scans for commit granularity: k buckets
+per pass at a scan cost of ceil(todo/k) passes, down to
+``buckets_per_pass=1`` — one bucket per job, the retry path for
+isolating a poisoned bucket.
 
 The manifest is a JSONL sidecar next to the output: one record per
 completed bucket with row counts and the model versions that produced
@@ -159,7 +159,6 @@ def run_resumable(
     conv_col: str = "conv_id",
     manifest_path: str | None = None,
     buckets_per_pass: int | None = None,
-    per_bucket: bool = False,
     observe_metrics: dict[str, Column] | None = None,
     model_versions: str = MODEL_VERSIONS,
 ) -> dict[int, dict]:
@@ -173,15 +172,15 @@ def run_resumable(
     of buckets, which is equivalent to per-bucket application exactly
     when results only depend on rows of the same conversation — the
     same property the bucket-commit semantics already require) and must
-    retain ``conv_col`` in its output; if it drops the column, the
-    per-bucket fallback path is used automatically.
+    retain ``conv_col`` in its output; if it drops the column, the run
+    falls back to one-bucket passes, whose partition value is the
+    pass's bucket.
 
     ``buckets_per_pass`` trades scan count against commit granularity:
     None (default) writes all incomplete buckets in one pass / one
-    input scan; k commits every k buckets at ceil(todo/k) scans.
-    ``per_bucket=True`` forces the one-bucket-per-job retry path (full
-    input scan per bucket — use it to isolate a failing bucket, not
-    for fresh runs).
+    input scan; k commits every k buckets at ceil(todo/k) scans; 1 is
+    the one-bucket-per-job retry path (full input scan per bucket — use
+    it to isolate a failing bucket, not for fresh runs).
 
     ``observe_metrics`` ({name: aggregate Column}) rides Spark's
     Observation API on the transform OUTPUT: the aggregates are
@@ -201,14 +200,9 @@ def run_resumable(
     if not todo:
         return done
 
-    if per_bucket:
-        return _run_per_bucket(
-            df, transform, out_path, n_buckets, conv_col, manifest_path,
-            done, todo, observe_metrics, model_versions,
-        )
-
     chunk = len(todo) if buckets_per_pass is None else max(1, buckets_per_pass)
-    for i in range(0, len(todo), chunk):
+    i = 0
+    while i < len(todo):
         group = todo[i : i + chunk]
         t0 = time.time()
         part = df
@@ -217,14 +211,16 @@ def run_resumable(
         obs_in = Observation(f"resumable_in_{i}_{t0}")
         part = part.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
         out = transform(part)
-        if conv_col not in out.columns:
+        if conv_col in out.columns:
+            bucket_col = bucket_expr(conv_col, n_buckets)
+        elif len(group) == 1:
+            bucket_col = F.lit(group[0])
+        else:
             # cannot derive the partition column from the output —
-            # fall back to bucketing the INPUT per bucket (scan-heavy,
-            # but correct for projection-style transforms)
-            return _run_per_bucket(
-                df, transform, out_path, n_buckets, conv_col, manifest_path,
-                done, todo, observe_metrics, model_versions,
-            )
+            # redo as one-bucket passes (scan-heavy, but correct for
+            # projection-style transforms)
+            chunk = 1
+            continue
         if BUCKET_COL in out.columns:
             raise ValueError(
                 f"transform output already has a '{BUCKET_COL}' column; "
@@ -241,7 +237,7 @@ def run_resumable(
         # from a crashed prior pass cannot survive into the manifest
         _clear_partition_dirs(df.sparkSession, out_path, group)
         (
-            out.withColumn(BUCKET_COL, bucket_expr(conv_col, n_buckets))
+            out.withColumn(BUCKET_COL, bucket_col)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(BUCKET_COL)
@@ -274,60 +270,7 @@ def run_resumable(
                 rec["metrics"] = pass_metrics
             _append_manifest(manifest_path, rec)
             done[b] = rec
-    return done
-
-
-def _run_per_bucket(
-    df: DataFrame,
-    transform: Callable[[DataFrame], DataFrame],
-    out_path: str,
-    n_buckets: int,
-    conv_col: str,
-    manifest_path: str,
-    done: dict[int, dict],
-    todo: list[int],
-    observe_metrics: dict[str, Column] | None = None,
-    model_versions: str = MODEL_VERSIONS,
-) -> dict[int, dict]:
-    """Retry path: one job (and one FULL input scan) per bucket.
-    Observed metrics are per-BUCKET here (finer than the pass-level
-    records of the main path — same keys, so consumers see a uniform
-    manifest either way)."""
-    bucketed = df.withColumn("_bucket", bucket_expr(conv_col, n_buckets))
-    for b in todo:
-        t0 = time.time()
-        part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-        obs_in = Observation(f"resumable_in_b{b}_{t0}")
-        part = part.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
-        out = transform(part)
-        obs_out = None
-        if observe_metrics:
-            obs_out = Observation(f"resumable_out_b{b}_{t0}")
-            out = out.observe(
-                obs_out, *[c.alias(name) for name, c in observe_metrics.items()]
-            )
-        target = os.path.join(out_path, f"{BUCKET_COL}={b}")
-        out.write.mode("overwrite").parquet(target)
-        n_rows = out.sparkSession.read.parquet(target).count()
-        obs_row = _observation_row(obs_in)
-        rec = {
-            "bucket": b,
-            "rows": n_rows,
-            "rows_in_pass": int(obs_row["rows_in"]) if obs_row else 0,
-            "seconds": round(time.time() - t0, 3),
-            "pass_buckets": 1,
-            "model_versions": model_versions,
-            "path": target,
-        }
-        if obs_out is not None:
-            out_row = _observation_row(obs_out)
-            rec["metrics"] = (
-                dict(out_row)
-                if out_row is not None
-                else {name: 0 for name in observe_metrics}
-            )
-        _append_manifest(manifest_path, rec)
-        done[b] = rec
+        i += len(group)
     return done
 
 

@@ -74,6 +74,29 @@ def test_dedup_docs_exact_null_text(spark):
     assert kept == [1, 2]  # 2 wins the null≡'' group (3, 5 are dups of it)
 
 
+def test_dedup_exact_null_key_loses_to_real_key(spark):
+    """A null key must not win its digest group: non-null keys beat null
+    ones (SQL min), so the null-key row can no longer erase the whole
+    group (regression: [(None,'a'),(2,'a'),(3,'a'),(4,'b')] returned
+    just [4]). A group whose keys are all null keeps exactly one row,
+    and that row is a real one, not an all-null row."""
+    from oscar_tools_spark.operators.dedup import corpus_digests, dedup_incremental
+
+    df = spark.createDataFrame(
+        [(None, "a"), (2, "a"), (3, "a"), (4, "b"), (None, "c"), (None, "c")],
+        "doc_id long, text string",
+    )
+    history = corpus_digests(
+        spark.createDataFrame([(100, "seen")], "doc_id long, text string")
+    )
+    for out in (
+        dedup_docs_exact(df, ["doc_id"]),
+        dedup_incremental(df, history, ["doc_id"]),
+    ):
+        got = sorted((r.text, r.doc_id) for r in out.collect())
+        assert got == [("a", 2), ("b", 4), ("c", None)], got
+
+
 def test_dedup_incremental_null_text(spark):
     """Null-text batch rows survive/drop like empty docs: history ''
     digest drops new NULLs; with no '' in history the smallest-key NULL

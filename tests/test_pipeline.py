@@ -193,12 +193,12 @@ def test_resumable_fresh_run_scans_source_once(spark, tmp_path):
 
 
 def test_resumable_per_bucket_retry_path(spark, tmp_path):
-    """per_bucket=True (the poisoned-bucket isolation path) produces
+    """buckets_per_pass=1 (the poisoned-bucket isolation path) produces
     the same committed output and manifest as the single-pass default."""
     t = synth_transcripts(spark, 40).cache()
     out_dir = str(tmp_path / "out")
     done = run_resumable(
-        t, lambda df: curate(df, CFG), out_dir, n_buckets=3, per_bucket=True
+        t, lambda df: curate(df, CFG), out_dir, n_buckets=3, buckets_per_pass=1
     )
     assert len(done) == 3
     assert all(rec["pass_buckets"] == 1 for rec in done.values())

@@ -351,3 +351,25 @@ def test_annotate_robots_no_corpus_shuffle(spark):
     for line in plan.splitlines():
         if "Exchange hashpartitioning" in line:
             assert "url" not in line, line
+
+
+def test_dedup_docs_exact_single_scan_no_join(spark):
+    """First-occurrence dedup is ONE min_by aggregate over the keyed
+    input: the source is scanned once and never joined back."""
+    from oscar_tools_spark.operators.dedup import dedup_docs_exact
+
+    plan = _plan(dedup_docs_exact(_docs(spark), ["doc_id"]))
+    assert plan.count("Scan parquet") == 1, plan[:2000]
+    assert "Join" not in plan, plan[:2000]
+
+
+def test_dedup_paragraphs_one_generate_no_window(spark):
+    """Paragraph dedup explodes once and picks first occurrences with a
+    map-side-combinable aggregate, not a digest-partitioned Window (a
+    hot boilerplate paragraph would be one unsplittable window
+    partition)."""
+    from oscar_tools_spark.operators.dedup import dedup_paragraphs
+
+    plan = _plan(dedup_paragraphs(_docs(spark), ["doc_id"]))
+    assert plan.count("Generate") == 1, plan[:3000]
+    assert "Window" not in plan, plan[:3000]

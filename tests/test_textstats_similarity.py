@@ -107,6 +107,37 @@ def test_dedup_embedding_cosine_drops_near_identical(spark):
     assert kept == [1, 3]
 
 
+def test_cosine_pairs_udf_null_and_ragged_match_expr(spark):
+    """Null and ragged-length vector pairs come out of the Arrow UDF as
+    NULL, like cosine_expr, so both fail a >= threshold filter the same
+    way; valid pairs agree exactly."""
+    from oscar_tools_spark.operators.similarity import cosine_expr, cosine_pairs_udf
+
+    df = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0], [1.0, 0.0]),  # cosine 1
+            (2, None, [1.0, 0.0]),  # null side
+            (3, [1.0, 0.0], [1.0, 0.0, 0.0]),  # ragged
+            (4, [1.0, 2.0], [2.0, 1.0]),  # cosine 0.8
+        ],
+        "id long, x array<double>, y array<double>",
+    )
+    vals = df.select(
+        "id",
+        cosine_expr(F.col("x"), F.col("y")).alias("e"),
+        cosine_pairs_udf()(F.col("x"), F.col("y")).alias("u"),
+    ).collect()
+    got = {r.id: (r.e, r.u) for r in vals}
+    assert got[2] == (None, None) and got[3] == (None, None)
+    assert got[1][0] == got[1][1] and got[4][0] == got[4][1]
+    for thr in (0.5, 0.9):
+        by_expr = df.filter(cosine_expr(F.col("x"), F.col("y")) >= thr)
+        by_udf = df.filter(cosine_pairs_udf()(F.col("x"), F.col("y")) >= thr)
+        assert sorted(r.id for r in by_expr.collect()) == sorted(
+            r.id for r in by_udf.collect()
+        )
+
+
 def _clustered_embeddings(spark, n_clusters=40, dup_every=3, dim=16):
     """Deterministic unit vectors with known near-dup clusters: every
     ``dup_every``-th base vector gets a tiny-perturbation twin."""
