@@ -845,8 +845,9 @@ def q_repetition_stats(spark, sf_dir):
     groupBy(doc_id, line) -> regroup -> join (two corpus-line
     Exchanges + a join that re-shuffles every doc) collapses into one
     fold over array_sort(split(text)). The inner join dropped
-    null-text docs (explode of a null array emits nothing); the
-    explicit isNotNull filter preserves that. Heavy expressions sit
+    null-text docs (explode of a null array emits nothing) and
+    null-doc_id docs (a null join key never matches); the explicit
+    isNotNull filters preserve both. Heavy expressions sit
     ABOVE the narrow (doc_id, text) sort so the range-sampling pass
     never runs them (the r5/r8 curation_pipeline lesson). Verified
     value- AND order-identical to the join shape at sf0.1
@@ -877,7 +878,7 @@ def q_repetition_stats(spark, sf_dir):
         lambda acc: acc.getField("best"),
     )
     return (
-        df.filter(F.col("text").isNotNull())
+        df.filter(F.col("text").isNotNull() & F.col("doc_id").isNotNull())
         .select("doc_id", "text")
         .orderBy("doc_id")
         .select(

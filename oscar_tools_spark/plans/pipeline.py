@@ -37,8 +37,6 @@ class CurationConfig:
     clean: bool = False
     use_model_langid: bool = True
     with_perplexity: bool = True
-    with_sentence_ids: bool = False
-    scrub_enabled: bool = True
     keep_dropped: bool = False  # keep all rows, exposing the `keep` flag
     # model-swap seams (see langid_model_udf / perplexity_udf): batch
     # scorers captured by value into the UDF closures — how a real
@@ -142,10 +140,6 @@ def annotate_stage(df: DataFrame, cfg: CurationConfig, text_col: str = "text") -
             out = out.withColumn(
                 "perplexity", ppl_mod.perplexity_udf(cfg.ppl_score_batch)(text)
             )
-    if cfg.with_sentence_ids:
-        out = out.withColumn(
-            "sentence_identifications", langid_mod.sentence_identifications_expr(text)
-        )
     return out
 
 
@@ -164,8 +158,6 @@ def filter_stage(df: DataFrame, cfg: CurationConfig, text_col: str = "text") -> 
 
 
 def scrub_stage(df: DataFrame, cfg: CurationConfig, text_col: str = "text") -> DataFrame:
-    if not cfg.scrub_enabled:
-        return df
     text = F.col(text_col)
     return df.withColumn("rule_hits", rule_hits_expr(text)).withColumn(
         text_col, scrubbed_expr(text)

@@ -1,7 +1,8 @@
-"""Dump `.explain(formatted)` physical plans for the headline queries
-into BENCH/PLANS.md — reviewable evidence that each hot path compiles
-to the plan the design rules promise (codegen spans, pushed filters,
-broadcast sides, ReusedExchange, no cartesian anything).
+"""Dump `.explain(formatted)` physical plans for the headline contract
+queries and for every bench.py registry query into BENCH/PLANS.md —
+reviewable evidence that each hot path compiles to the plan the design
+rules promise (codegen spans, pushed filters, broadcast sides,
+ReusedExchange, no cartesian anything).
 
 Usage: python scripts/dump_plans.py [sf_dir]
 """
@@ -71,8 +72,10 @@ def main(sf_dir: str) -> None:
     from oscar_tools_spark.session import get_spark
 
     import __spark_entry__ as E
+    from bench import QUERIES, load_inputs
 
-    spark = get_spark("plans", cores=8, shuffle_partitions=8)
+    cores = 8
+    spark = get_spark("plans", cores=cores, shuffle_partitions=cores)
     qs = E.queries()
     lines = [
         "# Physical plans (generated by scripts/dump_plans.py)",
@@ -88,6 +91,17 @@ def main(sf_dir: str) -> None:
     for name in HEADLINERS:
         df = qs[name](spark, sf_dir)
         lines += ["", f"## {name}", "", "```", formatted_plan(df).rstrip(), "```"]
+    lines += [
+        "",
+        "# bench.py registry queries",
+        "",
+        "The plan each bench.py query times (`run_noop(build())`), built",
+        "from the same `load_inputs` and the same registry loop.",
+    ]
+    inputs = load_inputs(spark, sf_dir, cores)
+    for name, _, prepare in QUERIES:
+        df = prepare(inputs)()
+        lines += ["", f"## bench: {name}", "", "```", formatted_plan(df).rstrip(), "```"]
     out = REPO / "BENCH" / "PLANS.md"
     out.write_text("\n".join(lines) + "\n")
     print(f"written {out}")

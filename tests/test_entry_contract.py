@@ -156,3 +156,24 @@ def test_repetition_stats_inrow_fold_matches_join_shape(spark, tmp_path):
     # plan string repeats it in the initial-plan section)
     assert "hashpartitioning" not in plan
     assert "rangepartitioning" in plan
+
+
+def test_repetition_stats_drops_null_doc_id(spark, tmp_path):
+    """A null doc_id row is dropped, as the pre-r8 inner join on doc_id
+    and the DuckDB oracle's join both drop it; the in-row fold filtered
+    only null text."""
+    from oscar_tools_spark.oracles import q_repetition_stats as oracle_sql
+
+    rows = [(1, "a\na\nb"), (None, "x\nx"), (2, "p q r s")]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    sf_dir = str(tmp_path)
+    df.write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
+
+    got = E.q_repetition_stats(spark, sf_dir).toPandas()
+    assert got["doc_id"].notna().all()
+    con = duckdb.connect()
+    con.sql(
+        f"create view documents as select * from read_parquet('{sf_dir}/documents.parquet/*.parquet')"
+    )
+    want = con.sql(oracle_sql()).df()
+    pd.testing.assert_frame_equal(normalize(got), normalize(want), check_dtype=False)
