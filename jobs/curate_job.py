@@ -188,6 +188,28 @@ def main() -> None:
         ap.error("need 0 < stride <= window (a 1-token window has no "
                  "valid default stride — pass --window-stride 1)")
 
+    from oscar_tools_spark.plans.pipeline import (
+        CurationConfig,
+        curate,
+        prefilter_stage,
+        repartition_conversations,
+    )
+
+    try:
+        # the tag sets are checked here, before a session, a digest
+        # write or the LM fit's scan
+        cfg = CurationConfig(
+            include=frozenset(args.include),
+            exclude=frozenset(args.exclude),
+            clean=args.clean,
+            use_model_langid=not args.no_model,
+            with_perplexity=not args.no_model,
+            c4_line_clean=args.c4_clean,
+            gopher_filter=args.gopher,
+        )
+    except ValueError as e:
+        ap.error(str(e))
+
     builder = SparkSession.builder
     if args.checkpoint_dir:
         # let the ContextCleaner delete reliable-checkpoint data once the
@@ -205,22 +227,8 @@ def main() -> None:
         spark.sparkContext.setCheckpointDir(args.checkpoint_dir)
 
     from oscar_tools_spark.plans.checkpoint import run_resumable
-    from oscar_tools_spark.plans.pipeline import (
-        CurationConfig,
-        curate,
-        repartition_conversations,
-    )
     from oscar_tools_spark.sources.tables import TableIO
 
-    cfg = CurationConfig(
-        include=frozenset(args.include),
-        exclude=frozenset(args.exclude),
-        clean=args.clean,
-        use_model_langid=not args.no_model,
-        with_perplexity=not args.no_model,
-        c4_line_clean=args.c4_clean,
-        gopher_filter=args.gopher,
-    )
     if args.langid_model:
         import dataclasses as _dc
 
@@ -308,6 +316,16 @@ def main() -> None:
 
         io.write(conversation_digests(df), args.emit_digests)
 
+    def normalized(part):
+        if not args.normalize:
+            return part
+        from oscar_tools_spark.operators.normalize import normalize_corpus
+
+        # before langid/annotation so curly-quoted stopwords and
+        # zero-width-split words identify correctly; narrow, fuses
+        # into the same codegen stage as the annotations
+        return normalize_corpus(part)
+
     def _resume_is_complete() -> bool:
         """True when every bucket is already committed — a resume
         no-op must not pay the LM fit's full corpus scan."""
@@ -329,31 +347,11 @@ def main() -> None:
         )
 
         # fit AFTER the repair/dedup pre-stages, and on the SAME text
-        # the scorer will see: transform() normalizes and C4-cleans
-        # before scoring, so the fit replays those stages (always on
-        # the FULL batch, never the todo buckets — a resume must score
-        # with the identical LM the first pass used)
-        fit_src = df
-        if args.normalize:
-            from oscar_tools_spark.operators.normalize import normalize_corpus
-
-            fit_src = normalize_corpus(fit_src)
-        if args.c4_clean:
-            from oscar_tools_spark.operators.c4_clean import c4_clean
-
-            fit_src = c4_clean(
-                fit_src,
-                min_words=cfg.c4_min_words,
-                require_terminal_punct=cfg.c4_require_terminal_punct,
-                min_kept_lines=1,
-            )
-        if args.gopher:
-            from pyspark.sql import functions as F
-
-            from oscar_tools_spark.functions.gopher import gopher_keep_expr
-
-            fit_src = fit_src.filter(gopher_keep_expr(F.col("text")))
-        lm = fit_char_bigram_lm(fit_src)
+        # the scorer will see: transform() normalizes and runs curate's
+        # pre-annotation stage before scoring, so the fit runs the same
+        # two (always on the FULL batch, never the todo buckets — a
+        # resume must score with the identical LM the first pass used)
+        lm = fit_char_bigram_lm(prefilter_stage(normalized(df), cfg))
         cfg = dataclasses.replace(
             cfg,
             ppl_score_batch=make_batch_scorer(lm),
@@ -373,14 +371,7 @@ def main() -> None:
         bmodel = load_bpe(args.bpe_model)
 
     def transform(part):
-        if args.normalize:
-            from oscar_tools_spark.operators.normalize import normalize_corpus
-
-            # before langid/annotation so curly-quoted stopwords and
-            # zero-width-split words identify correctly; narrow, fuses
-            # into the same codegen stage as the annotations
-            part = normalize_corpus(part)
-        out = curate(part, cfg)
+        out = curate(normalized(part), cfg)
         if split_spec:
             from oscar_tools_spark.operators.sampling import assign_split
 

@@ -907,7 +907,6 @@ def dedup_exact_substring(
     key_col: str,
     text_col: str = "text",
     gram_k: int = 50,
-    mode: str = "drop",
 ) -> DataFrame:
     """Drop documents sharing ANY exact word ``gram_k``-gram with a
     lower-keyed document — the distributable approximation of
@@ -924,13 +923,10 @@ def dedup_exact_substring(
     their whole normalized text (exact-duplicate semantics), matching
     the shared shingle definition and its DuckDB oracle.
 
-    ``mode="excise"`` switches to the Lee et al. span-REMOVAL
-    semantics via :func:`excise_exact_substring`: instead of dropping
-    the whole document, only the duplicated token span is cut out and
-    the surviving rows keep their (rewritten) text — at 100 TB the
-    difference between the two policies is real training tokens. The
-    two modes return different shapes (drop: surviving input rows;
-    excise: ALL rows, text rewritten), hence the explicit switch.
+    :func:`excise_exact_substring` is the Lee et al. span-REMOVAL
+    variant: only the duplicated token span is cut out and every row
+    survives with rewritten text — at 100 TB the difference between
+    the two policies is real training tokens.
 
     NOTE: calling this function EAGERLY RUNS a Spark job (the gram
     frame is materialized via ``plans.materialize`` so its two
@@ -938,11 +934,6 @@ def dedup_exact_substring(
     not lazy here.
     """
     from ..plans.materialize import materialize
-
-    if mode == "excise":
-        return excise_exact_substring(df, key_col, text_col, gram_k)
-    if mode != "drop":
-        raise ValueError(f"mode must be 'drop' or 'excise', got {mode!r}")
 
     # materialize the (key, gram-hash) frame once: its two consumers
     # (winner agg, flag join) shuffle on the same key but column-pruned

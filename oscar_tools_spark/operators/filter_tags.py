@@ -20,22 +20,27 @@ Decision per document:
 ``include ∩ exclude != {}`` (both non-empty) is a hard error, as in the
 reference (filter_tags.rs:136-144).
 
-The whole decision is one boolean column expression over the
-``array<string>`` annotations column (array_intersect + size + null
-handling) — no UDF, fully codegen'd, and Catalyst pushes it into the
-scan where the source supports it.
+The table is written once (``_keep``) over a per-tag test and a
+never-null "tagged" flag, fed either from the ``array<string>``
+annotations column or from the per-tag text conditions. Either way it
+is one boolean column expression — no UDF, fully codegen'd.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
+from functools import reduce
+from operator import and_, or_
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def validate_tag_sets(include: Iterable[str], exclude: Iterable[str]) -> tuple[list[str], list[str]]:
-    """Dedupe and validate the constraint sets (reference filter_tags.rs:136-144)."""
+def validate_tag_sets(
+    include: Iterable[str], exclude: Iterable[str], known: list[str] | None = None
+) -> tuple[list[str], list[str]]:
+    """Dedupe and validate the constraint sets (reference filter_tags.rs:136-144);
+    with ``known``, a tag outside that vocabulary is an error too."""
     inc = sorted(set(include))
     exc = sorted(set(exclude))
     overlap = set(inc) & set(exc)
@@ -43,7 +48,25 @@ def validate_tag_sets(include: Iterable[str], exclude: Iterable[str]) -> tuple[l
         raise ValueError(
             f"include and exclude tag sets must be disjoint; both contain {sorted(overlap)}"
         )
+    unknown = sorted(set(inc + exc) - set(known)) if known is not None else []
+    if unknown:
+        raise ValueError(f"unknown tags {unknown}; known tags are {known}")
     return inc, exc
+
+
+def _keep(
+    has: Callable[[str], Column], tagged: Column, inc: list[str], exc: list[str], clean: bool
+) -> Column:
+    """The truth table over validated tag lists; ``has(t)`` must imply ``tagged``."""
+    excluded = reduce(or_, map(has, exc)) if exc else F.lit(False)
+    if not inc:
+        # tag-less docs are kept (clean irrelevant); tagged docs only if
+        # an exclude set exists and they avoid it (the drop-by-default
+        # quirk). has(t) implies tagged, so both arms are one NOT.
+        return ~excluded if exc else ~tagged
+    return F.when(~tagged, F.lit(clean)).otherwise(
+        ~excluded & reduce(and_, map(has, inc))
+    )
 
 
 def keep_expr(
@@ -52,21 +75,15 @@ def keep_expr(
     exclude: Iterable[str] = (),
     clean: bool = False,
 ) -> Column:
-    """Boolean keep/drop column implementing the truth table above."""
+    """Boolean keep/drop column over an annotations array. Any tag is
+    accepted: the reference's extract-tags vocabulary is open."""
     inc, exc = validate_tag_sets(include, exclude)
-    no_tags = annotations.isNull() | (F.size(annotations) == 0)
-
-    expr = F.when(no_tags, F.lit(clean or not inc))
-    if exc:
-        expr = expr.when(
-            F.size(F.array_intersect(annotations, F.lit(exc))) > 0, F.lit(False)
-        )
-    if not inc:
-        # tagged doc, no include constraint: kept only if an exclude
-        # constraint exists (the reference's drop-by-default quirk).
-        return expr.otherwise(F.lit(bool(exc)))
-    return expr.otherwise(
-        F.size(F.array_intersect(annotations, F.lit(inc))) == F.lit(len(inc))
+    return _keep(
+        lambda t: F.coalesce(F.array_contains(annotations, t), F.lit(False)),
+        F.coalesce(F.size(annotations) > 0, F.lit(False)),
+        inc,
+        exc,
+        clean,
     )
 
 
@@ -76,42 +93,17 @@ def keep_expr_from_text(
     exclude: Iterable[str] = (),
     clean: bool = False,
 ) -> Column:
-    """The same truth table, compiled directly against the per-tag text
-    conditions instead of the materialized annotations array.
-
-    With static include/exclude sets the decision usually collapses to a
-    couple of scans (e.g. exclude-only -> ``NOT any(exclude conds)``),
-    and because the predicate no longer references the annotations
-    column, Catalyst pushes it below the annotation projection: dropped
-    rows never pay for annotation/scrub evaluation.
-    """
+    """The same truth table over the per-tag text conditions instead of
+    the materialized annotations array; only ``lexicons.ALL_TAGS`` have
+    one. The predicate does not reference the annotations column, so
+    Catalyst pushes it below the annotation projection: dropped rows
+    never pay for annotation/scrub evaluation."""
     from ..functions.annotations import tag_conditions
+    from ..functions.lexicons import ALL_TAGS
 
-    inc, exc = validate_tag_sets(include, exclude)
+    inc, exc = validate_tag_sets(include, exclude, ALL_TAGS)
     conds = tag_conditions(text)
-
-    def any_of(tags: list[str]) -> Column:
-        out = conds[tags[0]]
-        for t in tags[1:]:
-            out = out | conds[t]
-        return out
-
-    exc_hit = any_of(exc) if exc else F.lit(False)
-    if not inc:
-        if not exc:
-            # untagged -> keep (clean irrelevant); tagged -> drop
-            return ~any_of(list(conds))
-        # exclude-only: untagged docs are kept whether or not `clean` is
-        # set (clean only matters for tag-less docs, and with include
-        # empty those are kept regardless), and tagged docs are kept
-        # unless excluded — so both arms collapse to NOT excluded.
-        return ~exc_hit
-    inc_subset = conds[inc[0]]
-    for t in inc[1:]:
-        inc_subset = inc_subset & conds[t]
-    no_tags = ~any_of(list(conds))
-    tagged_keep = ~exc_hit & inc_subset
-    return F.when(no_tags, F.lit(clean)).otherwise(tagged_keep)
+    return _keep(conds.__getitem__, reduce(or_, conds.values()), inc, exc, clean)
 
 
 def filter_tags(

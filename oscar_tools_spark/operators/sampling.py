@@ -228,9 +228,9 @@ def cap_per_group(
     column name or an expression; NULL groups form their own capped
     group.
 
-    Scale shape: the same salted two-phase exact cap as
-    similarity.diversity_sample — phase 1 ranks within (group, salt)
-    so a 10^7-page domain never lands on one task, phase 2 re-ranks
+    Scale shape (also diversity_sample's per-cluster cap): a salted
+    two-phase exact cap — phase 1 ranks within (group, salt) so a
+    10^7-page domain never lands on one task, phase 2 re-ranks
     the ≤ n_salts*cap survivors per group. Exact: each group's true
     top ``cap`` rows by draw order each sit inside their own salt's
     top ``cap``, so phase 1 never evicts a winner. The draw/tiebreak

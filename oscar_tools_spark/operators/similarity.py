@@ -487,34 +487,18 @@ def diversity_sample(
     Adds ``cluster``. Scale shape: a BOUNDED driver-side centroid fit
     (ivf_centroids collects ``sample_size`` rows — fixed, not
     data-proportional — and runs one eager job at plan-construction
-    time), ONE Arrow matmul pass for assignment, then a salted
-    two-phase cap: phase 1 ranks within (cluster, salt) — parallelism
-    ``n_clusters * n_salts``, never a whole dense cell on one task —
-    and phase 2 re-ranks the surviving ≤ ``n_salts * per_cluster``
-    candidates per cluster. Exact: each cluster's true top
-    ``per_cluster`` rows by draw order each sit inside their own
-    salt's top ``per_cluster``, so phase 1 never evicts a winner.
+    time), ONE Arrow matmul pass for assignment, then
+    ``sampling.cap_per_group``'s exact salted two-phase cap, so a dense
+    cell never lands whole on one task.
     """
-    from pyspark.sql import Window
+    from ..operators.sampling import cap_per_group
 
-    from ..operators.sampling import uniform_hash32
-
+    # checked before the eager centroid fit, not after it
     if per_cluster <= 0:
         raise ValueError("per_cluster must be positive")
-    n_salts = 16
     cents = ivf_centroids(
         df, dim, vec_col, key_col, n_centroids=n_clusters, sample_size=sample_size
     )
     assign = ivf_assign_udf(cents, n_assign=1)
     out = df.withColumn("cluster", assign(F.col(vec_col)).getItem(0))
-    draw = uniform_hash32([key_col], seed)
-    salt = F.pmod(F.xxhash64(F.col(key_col), F.lit(seed)), F.lit(n_salts))
-    w1 = Window.partitionBy("cluster", salt).orderBy(draw, F.col(key_col))
-    w2 = Window.partitionBy("cluster").orderBy(draw, F.col(key_col))
-    return (
-        out.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= F.lit(int(per_cluster)))
-        .withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= F.lit(int(per_cluster)))
-        .drop("_rn")
-    )
+    return cap_per_group(out, "cluster", per_cluster, [key_col], seed)

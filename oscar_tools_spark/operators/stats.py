@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..functions.annotations import annotations_expr
 from ..functions.langid import langid_label_expr
+from ..functions.lexicons import ALL_TAGS
 from ..functions.textstats import quality_score_expr, ws_token_count
 
 
@@ -33,7 +34,7 @@ def corpus_stats(df: DataFrame, text_col: str = "text", lang_col: str | None = N
         F.sum(
             F.when(F.array_contains(F.coalesce(F.col("annotations"), F.array()), t), 1).otherwise(0)
         ).alias(f"n_{t}")
-        for t in ["tiny", "short_sentences", "header", "footer", "noisy", "adult"]
+        for t in ALL_TAGS
     ]
     return (
         base.groupBy("lang")

@@ -20,14 +20,15 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import langid as langid_mod
 from ..functions import perplexity as ppl_mod
-from ..functions.annotations import annotations_expr
+from ..functions.annotations import annotate
+from ..functions.lexicons import ALL_TAGS
 from ..operators.filter_tags import keep_expr_from_text, validate_tag_sets
-from ..operators.scrub import rule_hits_expr, scrubbed_expr
+from ..operators.scrub import scrub
 
 
 @dataclass
@@ -64,7 +65,8 @@ class CurationConfig:
     gopher_overrides: dict | None = None
 
     def __post_init__(self):
-        validate_tag_sets(self.include, self.exclude)
+        # only the built-in tags have text conditions: fail here, not mid-job
+        validate_tag_sets(self.include, self.exclude, ALL_TAGS)
 
 
 MODEL_VERSIONS = f"langid={langid_mod.MODEL_VERSION};ppl={ppl_mod.MODEL_VERSION}"
@@ -111,7 +113,7 @@ def fused_model_udf(langid_batch=None, ppl_batch=None):
 
 def annotate_stage(df: DataFrame, cfg: CurationConfig, text_col: str = "text") -> DataFrame:
     text = F.col(text_col)
-    out = df.withColumn("annotations", annotations_expr(text))
+    out = annotate(df, text_col)
     if cfg.use_model_langid and cfg.with_perplexity:
         # one Python round-trip for both models; ExtractPythonUDFs
         # evaluates the (canonically equal) UDF call once and the
@@ -144,13 +146,11 @@ def annotate_stage(df: DataFrame, cfg: CurationConfig, text_col: str = "text") -
 
 
 def filter_stage(df: DataFrame, cfg: CurationConfig, text_col: str = "text") -> DataFrame:
-    """Filter with the truth table compiled against the raw text
-    conditions (keep_expr_from_text) rather than the annotations array:
-    the predicate is then independent of the annotation projection, so
-    Catalyst pushes it to the scan and dropped rows never pay for
-    annotations/langid/scrub. Equivalent to
-    keep_expr(annotations, ...) by construction (same tag_conditions;
-    asserted by the F1 test)."""
+    """Filter with the truth table over the raw text conditions
+    (keep_expr_from_text), not the annotations array: the predicate is
+    independent of the annotation projection, so Catalyst pushes it to
+    the scan and dropped rows never pay for annotations/langid/scrub.
+    Agrees with keep_expr(annotations) on every <=1-tag config (tested)."""
     keep = keep_expr_from_text(F.col(text_col), cfg.include, cfg.exclude, cfg.clean)
     if cfg.keep_dropped:
         return df.withColumn("keep", keep)
@@ -158,10 +158,7 @@ def filter_stage(df: DataFrame, cfg: CurationConfig, text_col: str = "text") -> 
 
 
 def scrub_stage(df: DataFrame, cfg: CurationConfig, text_col: str = "text") -> DataFrame:
-    text = F.col(text_col)
-    return df.withColumn("rule_hits", rule_hits_expr(text)).withColumn(
-        text_col, scrubbed_expr(text)
-    )
+    return scrub(df, text_col)
 
 
 def lineage_stage(df: DataFrame, versions: str = MODEL_VERSIONS) -> DataFrame:
@@ -177,12 +174,10 @@ def lineage_stage(df: DataFrame, versions: str = MODEL_VERSIONS) -> DataFrame:
     return out
 
 
-def curate(df: DataFrame, cfg: CurationConfig | None = None, text_col: str = "text") -> DataFrame:
-    """The full pipeline as one narrow plan. Optional stages
-    (cfg.c4_line_clean, cfg.gopher_filter) slot in ahead of annotation
-    without adding a shuffle — every stage stays a projection/filter,
-    so the whole pipeline still compiles to a single codegen pass."""
-    cfg = cfg or CurationConfig()
+def prefilter_stage(df: DataFrame, cfg: CurationConfig, text_col: str = "text") -> DataFrame:
+    """The optional stages ahead of annotation (cfg.c4_line_clean,
+    cfg.gopher_filter), both narrow projections/filters. A corpus-fit
+    perplexity LM trains on this stage's output: the text it scores."""
     out = df
     if cfg.c4_line_clean:
         from ..operators.c4_clean import c4_annotate, c4_clean
@@ -200,19 +195,22 @@ def curate(df: DataFrame, cfg: CurationConfig | None = None, text_col: str = "te
     if cfg.gopher_filter:
         from ..functions.gopher import gopher_keep_expr, gopher_reasons_expr
 
-        gk = gopher_keep_expr(F.col(text_col), **(cfg.gopher_overrides or {}))
+        text, overrides = F.col(text_col), cfg.gopher_overrides or {}
+        gk = gopher_keep_expr(text, **overrides)
         if cfg.keep_dropped:
             out = out.withColumn("gopher_keep", gk).withColumn(
-                "gopher_reasons",
-                F.concat_ws(
-                    "|",
-                    gopher_reasons_expr(
-                        F.col(text_col), **(cfg.gopher_overrides or {})
-                    ),
-                ),
+                "gopher_reasons", F.concat_ws("|", gopher_reasons_expr(text, **overrides))
             )
         else:
             out = out.filter(gk)
+    return out
+
+
+def curate(df: DataFrame, cfg: CurationConfig | None = None, text_col: str = "text") -> DataFrame:
+    """The full pipeline as one narrow plan: every stage is a
+    projection/filter, so it compiles to a single codegen pass."""
+    cfg = cfg or CurationConfig()
+    out = prefilter_stage(df, cfg, text_col)
     out = annotate_stage(out, cfg, text_col)
     out = filter_stage(out, cfg)
     out = scrub_stage(out, cfg, text_col)

@@ -66,12 +66,7 @@ def get_spark(
         # handling stays on. A/B over the join-heavy suite queries at
         # sf0.1/32: dedup_components 3.48->3.12, incremental minhash
         # 1.93->1.75, repetition_stats 1.20->1.11, simhash ~flat.
-        # Env-overridable for deployments that want the always-spills
-        # conservative default back.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 5000-row Arrow batches keep the vectorized scorers' numpy

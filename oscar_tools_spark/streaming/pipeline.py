@@ -1,10 +1,11 @@
 """Structured Streaming front-end for the curation pipeline.
 
 The reference is purely batch (SURVEY.md §1.3); this is the forward-
-looking continuous-ingest path: the same per-turn transforms (annotate,
-filter, scrub are all narrow, stateless column expressions) apply to a
-``readStream`` unchanged, so a curation job can run incrementally over
-an arriving corpus with exactly-once parquet sinks and checkpointed
+looking continuous-ingest path: ``plans.pipeline.curate`` applies to a
+``readStream`` unchanged (annotate, filter, scrub are all narrow,
+stateless column expressions; ``source_part`` lineage is empty where
+the stream source has no file name), so a curation job can run
+incrementally over an arriving corpus with exactly-once parquet sinks and checkpointed
 progress. Aggregation examples (per-language rates) use watermarked
 event-time windows.
 """
@@ -14,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..plans.pipeline import CurationConfig, curate
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -35,13 +34,6 @@ def stream_transcripts(spark: SparkSession, path: str) -> DataFrame:
         .option("maxFilesPerTrigger", 8)
         .parquet(path)
     )
-
-
-def curate_stream(stream: DataFrame, cfg: CurationConfig | None = None) -> DataFrame:
-    """The batch pipeline applied to a stream — identical plan, because
-    every stage is stateless/narrow. (input_file_name is null in some
-    stream sources; lineage falls back to empty.)"""
-    return curate(stream, cfg)
 
 
 def tag_rates(stream: DataFrame, window: str = "10 minutes", slide: str | None = None) -> DataFrame:

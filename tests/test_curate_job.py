@@ -559,6 +559,30 @@ def test_job_assign_split_rejects_bad_spec(transcripts_path, tmp_path, capsys):
             )
 
 
+def test_job_rejects_unknown_tag_before_any_work(transcripts_path, tmp_path, capsys, monkeypatch):
+    """A misspelt tag is an argument error, raised before the session,
+    the digest write and the LM fit."""
+    import os
+
+    import pytest
+    from pyspark.sql import SparkSession
+
+    def no_session(self):
+        raise AssertionError("session requested before the config was checked")
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", no_session)
+    digs = str(tmp_path / "digs")
+    with pytest.raises(SystemExit) as exc:
+        _run_job(
+            capsys,
+            ["--input", transcripts_path, "--output", str(tmp_path / "o"),
+             "--exclude", "adlt", "--emit-digests", digs, "--fit-perplexity"],
+        )
+    assert exc.value.code == 2
+    assert "'adlt'" in capsys.readouterr().err
+    assert not os.path.exists(digs)
+
+
 def test_job_full_stack_composition(spark, long_transcripts_path, tmp_path, capsys):
     """THE all-flags run: every stage flag the job exposes, at once —
     validate + normalize + structural filter + merge-roles + C4 +

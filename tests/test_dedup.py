@@ -409,10 +409,7 @@ def test_excise_exact_substring_golden(spark):
     adjacent spans merge into one cut, punctuation-only tokens inside a
     span ride along, the winner doc and untouched docs keep their
     EXACT original text."""
-    from oscar_tools_spark.operators.dedup import (
-        dedup_exact_substring,
-        excise_exact_substring,
-    )
+    from oscar_tools_spark.operators.dedup import excise_exact_substring
 
     rows = [
         (1, "the quick brown fox jumps over the lazy dog"),
@@ -447,20 +444,6 @@ def test_excise_exact_substring_golden(spark):
     assert got == want
     # row count preserved, no rows dropped
     assert len(got) == len(rows)
-
-    # mode dispatch through dedup_exact_substring
-    via_mode = {
-        r.doc_id: r.text
-        for r in dedup_exact_substring(
-            df, "doc_id", gram_k=3, mode="excise"
-        ).collect()
-    }
-    assert via_mode == want
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="drop.*excise|excise|mode"):
-        dedup_exact_substring(df, "doc_id", mode="nope")
 
 
 def test_excise_merges_adjacent_spans(spark):

@@ -146,3 +146,62 @@ def test_keep_expr_matches_reference_model_exhaustively(spark):
         for i, tags in enumerate(tag_lists):
             want = ref_filter_keep(tags, set(inc), set(exc), clean)
             assert got[i] == want, (tags, set(inc), set(exc), clean)
+
+
+def test_text_and_annotation_forms_agree_for_every_config(spark, sf_dir):
+    """keep_expr over the annotations array and keep_expr_from_text over
+    the raw text agree row for row on every disjoint (include, exclude)
+    pair of <=1-tag sets, with both clean values."""
+    from oscar_tools_spark.datagen import synth_transcripts
+    from oscar_tools_spark.functions.annotations import annotations_expr
+    from oscar_tools_spark.functions.lexicons import ALL_TAGS
+    from oscar_tools_spark.operators.filter_tags import keep_expr_from_text
+
+    df = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("text")
+        .unionByName(synth_transcripts(spark, 100).select("text"))
+        .withColumn("annotations", annotations_expr(F.col("text")))
+    )
+    sets = [frozenset()] + [frozenset({t}) for t in ALL_TAGS]
+    configs = [
+        (inc, exc, clean)
+        for inc in sets
+        for exc in sets
+        if not inc & exc
+        for clean in (False, True)
+    ]
+    assert len(configs) == 86
+    ann, text = F.col("annotations"), F.col("text")
+    mismatches = [
+        F.sum(
+            (~keep_expr(ann, inc, exc, clean).eqNullSafe(
+                keep_expr_from_text(text, inc, exc, clean)
+            )).cast("int")
+        ).alias(f"c{i}")
+        for i, (inc, exc, clean) in enumerate(configs)
+    ]
+    tag_rows = [
+        F.sum(F.array_contains(ann, t).cast("int")).alias(t) for t in ALL_TAGS
+    ]
+    row = df.agg(F.count("*").alias("n"), *tag_rows, *mismatches).first()
+    # non-vacuous: every tag fires somewhere, and untagged rows exist
+    assert all(row[t] > 0 for t in ALL_TAGS), row
+    assert row["n"] > max(row[t] for t in ALL_TAGS)
+    bad = [configs[i] for i in range(len(configs)) if row[f"c{i}"]]
+    assert not bad, bad
+
+
+def test_text_form_rejects_unknown_tags(spark):
+    """Only the built-in tags have a text condition: the text form and
+    CurationConfig fail fast on anything else, while the annotation form
+    keeps the reference's open vocabulary."""
+    from oscar_tools_spark.operators.filter_tags import keep_expr_from_text
+    from oscar_tools_spark.plans.pipeline import CurationConfig
+
+    with pytest.raises(ValueError, match=r"'adlt'.*'short_sentences'"):
+        CurationConfig(exclude=frozenset({"adlt"}))
+    with pytest.raises(ValueError, match=r"'adlt'.*'short_sentences'"):
+        keep_expr_from_text(F.col("text"), include={"adlt"})
+    df = spark.createDataFrame([(1, ["adlt"]), (2, ["tiny"])], SCHEMA)
+    assert [r.id for r in filter_tags(df, exclude={"adlt"}).collect()] == [2]

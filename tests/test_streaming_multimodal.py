@@ -12,9 +12,8 @@ from oscar_tools_spark.operators.multimodal import (
     extract_features,
     synth_media,
 )
-from oscar_tools_spark.plans.pipeline import CurationConfig
+from oscar_tools_spark.plans.pipeline import CurationConfig, curate
 from oscar_tools_spark.streaming.pipeline import (
-    curate_stream,
     run_to_parquet,
     stream_transcripts,
     tag_rates,
@@ -37,14 +36,14 @@ def transcript_dir(spark, tmp_path_factory):
 def test_streaming_curation_matches_batch(spark, transcript_dir, tmp_path):
     stream = stream_transcripts(spark, transcript_dir)
     assert stream.isStreaming
-    curated = curate_stream(stream, CFG)
+    curated = curate(stream, CFG)
     q = run_to_parquet(
         curated, str(tmp_path / "out"), str(tmp_path / "ckpt"), once=True
     )
     q.awaitTermination(120)
     got = spark.read.parquet(str(tmp_path / "out"))
 
-    batch = curate_stream(spark.read.parquet(transcript_dir), CFG)
+    batch = curate(spark.read.parquet(transcript_dir), CFG)
     assert got.count() == batch.count()
     a = {(r.conv_id, r.turn_idx): r.text for r in got.collect()}
     b = {(r.conv_id, r.turn_idx): r.text for r in batch.collect()}
