@@ -857,12 +857,10 @@ def q_repetition_stats(spark, sf_dir):
     df = _docs(spark, sf_dir)
     lines = F.split(F.col("text"), "\n")
     sorted_lines = F.array_sort(lines)
-    # fold state: (prev line, current run length, best run length);
-    # lines are never NULL (split output), so prev=NULL marks "first"
-    bump = lambda acc, x: F.when(  # noqa: E731 — local expr builder
-        x.eqNullSafe(acc.getField("prev")),
-        acc.getField("run") + F.lit(1).cast("bigint"),
-    ).otherwise(F.lit(1).cast("bigint"))
+    # fold state: (prev line, current run, longest earlier run); lines
+    # are never NULL (split output), so prev=NULL marks "first". The run
+    # is bumped once per line (HOF lambdas get no common-subexpression
+    # elimination); the finish step folds in the last run.
     max_line_count = F.aggregate(
         sorted_lines,
         F.struct(
@@ -872,10 +870,15 @@ def q_repetition_stats(spark, sf_dir):
         ),
         lambda acc, x: F.struct(
             x.alias("prev"),
-            bump(acc, x).alias("run"),
-            F.greatest(acc.getField("best"), bump(acc, x)).alias("best"),
+            F.when(
+                x.eqNullSafe(acc.getField("prev")),
+                acc.getField("run") + F.lit(1).cast("bigint"),
+            )
+            .otherwise(F.lit(1).cast("bigint"))
+            .alias("run"),
+            F.greatest(acc.getField("best"), acc.getField("run")).alias("best"),
         ),
-        lambda acc: acc.getField("best"),
+        lambda acc: F.greatest(acc.getField("best"), acc.getField("run")),
     )
     return (
         df.filter(F.col("text").isNotNull() & F.col("doc_id").isNotNull())

@@ -26,7 +26,7 @@ _REPO_ROOT = str(Path(__file__).resolve().parent.parent)
 if _REPO_ROOT not in sys.path:
     sys.path.append(_REPO_ROOT)
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 
 
 def main() -> None:
@@ -226,7 +226,7 @@ def main() -> None:
     if args.checkpoint_dir:
         spark.sparkContext.setCheckpointDir(args.checkpoint_dir)
 
-    from oscar_tools_spark.plans.checkpoint import run_resumable
+    from oscar_tools_spark.plans.checkpoint import observation_row, run_resumable
     from oscar_tools_spark.sources.tables import TableIO
 
     if args.langid_model:
@@ -498,8 +498,15 @@ def main() -> None:
                 .repartitionByRange(F.col("position"))
                 .sortWithinPartitions("position")
             )
-        io.write(sft, args.render_chat)
-        n_sft = io.read(args.render_chat).count()
+        # counted on the render write itself; observed after the sort,
+        # above the range exchange, so its sampling job does not run it
+        rendered = Observation("render_chat")
+        io.write(
+            sft.observe(rendered, F.count(F.lit(1)).alias("conversations")),
+            args.render_chat,
+        )
+        # None: a provably empty render was pruned from the plan
+        n_sft = (observation_row(rendered) or {"conversations": 0})["conversations"]
         print(json.dumps({
             "render_chat": args.render_chat,
             "conversations": n_sft,

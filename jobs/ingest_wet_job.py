@@ -38,11 +38,14 @@ smallest surviving set.
         --input 's3://.../segments/*/wet/*.warc.wet.gz' --output <path> \
         [--cap-per-host 1000] [--normalize] [--langs en de] \
         [--langid-threshold 0.5] [--c4-clean] [--gopher]
-        [--dedup-paragraphs] [--dedup-exact] [--minhash-dedup] [--funnel]
+        [--dedup-paragraphs] [--dedup-exact] [--minhash-dedup]
 
-By default only input/output rows are counted (one action each); at
-10^8-document scale per-stage counts each replay upstream lineage, so
-the full funnel is opt-in via ``--funnel``.
+The summary's row counts — rows in, rows after every enabled stage,
+rows out — are observed on the one write job; nothing is counted by a
+separate action or read back from the output. Rows out is observed in
+the write's result stage and is exact; a stage count below a shuffle
+runs in a map stage, and a map stage Spark re-runs after a fetch
+failure counts its rows again.
 """
 
 from __future__ import annotations
@@ -56,7 +59,7 @@ _REPO_ROOT = str(Path(__file__).resolve().parent.parent)
 if _REPO_ROOT not in sys.path:
     sys.path.append(_REPO_ROOT)
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 
 
 def main() -> None:
@@ -87,8 +90,6 @@ def main() -> None:
     ap.add_argument("--dedup-paragraphs", action="store_true")
     ap.add_argument("--dedup-exact", action="store_true")
     ap.add_argument("--minhash-dedup", action="store_true")
-    ap.add_argument("--funnel", action="store_true",
-                    help="count rows after EVERY stage (replays lineage)")
     args = ap.parse_args()
     if args.langid_threshold and not args.langs:
         ap.error("--langid-threshold does nothing without --langs")
@@ -112,6 +113,7 @@ def main() -> None:
     )
     from oscar_tools_spark.operators.normalize import normalize_text_expr
     from oscar_tools_spark.operators.urlblock import cap_per_host
+    from oscar_tools_spark.plans.checkpoint import observation_row
     from oscar_tools_spark.sources.wet import read_wet
 
     spark = SparkSession.builder.appName("ingest-wet").getOrCreate()
@@ -154,14 +156,13 @@ def main() -> None:
             "warc_date",
             "text",
         )
-    funnel: dict[str, int] = {}
-    rows_in = df.count()
+    observed: dict[str, Observation] = {}
 
     def stage(name: str, out):
-        if args.funnel:
-            funnel[name] = out.count()
-        return out
+        observed[name] = Observation(f"ingest_wet_{name}")
+        return out.observe(observed[name], F.count(F.lit(1)).alias("rows"))
 
+    df = stage("rows_in", df)
     if args.drop_noindex:
         df = stage("drop_noindex", df.filter(~F.col("noindex")))
     if args.licensed_only:
@@ -205,12 +206,16 @@ def main() -> None:
     if args.minhash_dedup:
         df = stage("minhash_dedup", dedup_minhash_lsh(df, "doc_uid"))
 
-    df.write.mode("overwrite").parquet(args.output)
-    rows_out = spark.read.parquet(args.output).count()
+    stage("rows_out", df).write.mode("overwrite").parquet(args.output)
+    # None: the observed subtree was provably empty and pruned
+    funnel = {
+        name: (observation_row(obs) or {"rows": 0})["rows"]
+        for name, obs in observed.items()
+    }
     print(json.dumps({
         "job": "ingest_wet",
-        "rows_in": rows_in,
-        "rows_out": rows_out,
+        "rows_in": funnel.pop("rows_in"),
+        "rows_out": funnel.pop("rows_out"),
         "funnel": funnel,
         "stages": {
             "input_format": args.input_format,

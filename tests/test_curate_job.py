@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -21,7 +22,7 @@ def _run_job_all(capsys, argv: list[str]) -> list[dict]:
     """Run the curate job CLI in-process and return EVERY summary JSON
     line it prints (a render-chat run prints two: the curate summary,
     then the render summary)."""
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
     import curate_job
 
     old = sys.argv

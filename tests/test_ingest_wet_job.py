@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
 
 def _line(seed: str) -> str:
@@ -29,7 +30,7 @@ P_B = _para("bravo")
 
 
 def _run_job(capsys, argv: list[str]) -> dict:
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
     import ingest_wet_job
 
     old = sys.argv
@@ -72,8 +73,7 @@ def test_ingest_wet_job_full_stack(spark, tmp_path, capsys):
         ["--input", str(src), "--output", out,
          "--cap-per-host", "3", "--normalize", "--langs", "en",
          "--langid-threshold", "0.3", "--c4-clean", "--gopher",
-         "--dedup-paragraphs", "--dedup-exact", "--minhash-dedup",
-         "--funnel"],
+         "--dedup-paragraphs", "--dedup-exact", "--minhash-dedup"],
     )
     assert summary["rows_in"] == 8
     f = summary["funnel"]
@@ -146,7 +146,7 @@ def test_ingest_html_mode(spark, tmp_path, capsys):
         capsys,
         ["--input", str(src), "--output", out_path,
          "--input-format", "html", "--drop-noindex", "--licensed-only",
-         "--c4-clean", "--gopher", "--dedup-exact", "--funnel"],
+         "--c4-clean", "--gopher", "--dedup-exact"],
     )
     assert rep["rows_in"] == 4
     assert rep["funnel"]["drop_noindex"] == 3
@@ -197,7 +197,7 @@ def test_ingest_warc_mode(spark, tmp_path, capsys):
     rep = _run_job(
         capsys,
         ["--input", str(src), "--output", out_path,
-         "--input-format", "warc", "--cap-per-host", "2", "--funnel"],
+         "--input-format", "warc", "--cap-per-host", "2"],
     )
     assert rep["rows_in"] == 4
     assert rep["funnel"]["cap_per_host"] == 3  # bighost capped 3 -> 2

@@ -125,7 +125,7 @@ def test_resumable_clears_stale_partials_in_todo_buckets(spark, tmp_path):
     """Crashed-run tail case: dynamic partition overwrite only replaces
     partitions PRESENT in the new write, so stale partial files in a
     todo bucket used to survive when the re-run transform legitimately
-    emitted zero rows for it — and _bucket_counts recorded them as
+    emitted zero rows for it — and the manifest recorded them as
     committed. The pre-write cleanup must delete them."""
     from pyspark.sql import functions as F
 
@@ -237,6 +237,50 @@ def test_resumable_buckets_per_pass_chunks_commits(spark, tmp_path):
     assert all(rec["pass_buckets"] == 2 for rec in done.values())
     assert read_resumable_output(spark, out_dir).count() == curate(t, CFG).count()
     t.unpersist()
+
+
+@pytest.mark.parametrize(
+    "case, kwargs, want_jobs",
+    [
+        ("empty_bucket", {}, 1),
+        ("two_per_pass", {"buckets_per_pass": 2}, 2),
+        ("conv_id_dropped", {}, 4),
+    ],
+)
+def test_resumable_pass_is_one_write_job(spark, tmp_path, case, kwargs, want_jobs):
+    """Each pass runs exactly ONE Spark job, the write: the manifest's
+    per-bucket rows are observed on it, not read back from the output,
+    and equal the committed rows per bucket — including a bucket the
+    transform empties and the one-bucket passes taken when the
+    transform drops conv_id."""
+    from oscar_tools_spark.plans.checkpoint import bucket_expr
+
+    t = synth_transcripts(spark, 60)
+    victim = t.select(bucket_expr("conv_id", 4)).first()[0]
+    transform = {
+        "empty_bucket": lambda df: df.filter(bucket_expr("conv_id", 4) != victim),
+        "two_per_pass": lambda df: df,
+        "conv_id_dropped": lambda df: df.drop("conv_id"),
+    }[case]
+    out_dir = str(tmp_path / "out")
+    sc = spark.sparkContext
+    group = f"resumable-{case}"
+    sc.setJobGroup(group, group)
+    try:
+        done = run_resumable(t, transform, out_dir, n_buckets=4, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == want_jobs
+    committed = {
+        r.bucket: r["count"]
+        for r in read_resumable_output(spark, out_dir).groupBy("bucket").count().collect()
+    }
+    assert {b: rec["rows"] for b, rec in done.items()} == {
+        b: committed.get(b, 0) for b in range(4)
+    }
+    if case == "empty_bucket":
+        assert done[victim]["rows"] == 0
+    assert sum(rec["rows"] for rec in done.values()) > 0
 
 
 def test_repartition_conversations_salting(spark):
