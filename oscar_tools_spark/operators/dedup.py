@@ -20,8 +20,11 @@ Scale notes
 * MinHash/SimHash signatures are built from md5 (available in both
   Spark and DuckDB so oracles can replay them); at 100 TB swap in
   ``xxhash64`` for ~3× cheaper hashing — the structure is identical.
-* LSH band self-joins are equi-joins on band keys -> shuffle-hash/SMJ
-  on a well-distributed key; AQE's skew-join handles hot bands.
+* ``dedup_minhash_lsh`` keys a min-window on (band, band key), not a
+  band self-join, and AQE does not split window partitions: a hot band
+  bucket (many near-identical documents) lands whole in one task.
+  AQE's skew-join only covers the joins that remain, such as
+  ``dedup_simhash_hamming``'s chunk self-join.
 """
 
 from __future__ import annotations
@@ -31,8 +34,9 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_hash32_expr
 
-def _ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Repartition when the input has fewer partitions than cores.
+def _ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Lift a narrow input with fewer partitions than cores to
+    ``defaultParallelism``, deciding from the plan without running it.
 
     Shingling/minhashing EXPLODES ~100 rows per document and pays heavy
     per-gram expression work; a small input file arrives as ONE split,
@@ -41,10 +45,19 @@ def _ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Dat
     repartition shuffle moves only the raw documents — trivial next to
     the exploded work it unlocks. At real scale inputs already carry
     thousands of splits and this is a no-op.
+
+    Only an input whose physical plan has no ``Exchange`` (a narrow map
+    over scans or checkpoints) is counted and lifted: its partition
+    count is known without a job. Over an exchange the input is returned
+    unchanged. Asking an adaptive plan for its partition count runs its
+    query stages, which the real query then runs again, and AQE already
+    sizes post-shuffle partitions: with ``parallelismFirst`` coalescing
+    it keeps ``defaultParallelism`` of them unless they would fall below
+    ``minPartitionSize``.
     """
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if "Exchange" not in plan and df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
 

@@ -18,6 +18,18 @@ def spark():
     yield spark
 
 
+@pytest.fixture
+def jobs_started(spark, request):
+    """A callable returning how many Spark jobs this test has started so
+    far: the test runs under its own job group, read back through
+    ``statusTracker``."""
+    sc = spark.sparkContext
+    group = request.node.nodeid
+    sc.setJobGroup(group, group)
+    yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"

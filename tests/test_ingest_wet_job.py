@@ -43,7 +43,9 @@ def _run_job(capsys, argv: list[str]) -> dict:
     return json.loads(out[-1])
 
 
-def test_ingest_wet_job_full_stack(spark, tmp_path, capsys):
+def test_ingest_wet_job_full_stack(spark, tmp_path, capsys, monkeypatch, jobs_started):
+    from pyspark.sql import DataFrameWriter
+
     from oscar_tools_spark.sources.wet import synth_wet
 
     date = "2024-01-01T00:00:00Z"
@@ -68,6 +70,17 @@ def test_ingest_wet_job_full_stack(spark, tmp_path, capsys):
     src.write_bytes(synth_wet(records))
     out = str(tmp_path / "out")
 
+    # building the stage chain must run nothing: every job is the
+    # write's, so no stage's upstream is computed twice
+    jobs_at_write = []
+    write_parquet = DataFrameWriter.parquet
+
+    def spy(self, *args, **kwargs):
+        jobs_at_write.append(jobs_started() - before)
+        return write_parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    before = jobs_started()
     summary = _run_job(
         capsys,
         ["--input", str(src), "--output", out,
@@ -75,6 +88,7 @@ def test_ingest_wet_job_full_stack(spark, tmp_path, capsys):
          "--langid-threshold", "0.3", "--c4-clean", "--gopher",
          "--dedup-paragraphs", "--dedup-exact", "--minhash-dedup"],
     )
+    assert jobs_at_write == [0]
     assert summary["rows_in"] == 8
     f = summary["funnel"]
     assert f["cap_per_host"] == 7  # one junkhost doc evicted

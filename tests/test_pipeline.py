@@ -247,7 +247,9 @@ def test_resumable_buckets_per_pass_chunks_commits(spark, tmp_path):
         ("conv_id_dropped", {}, 4),
     ],
 )
-def test_resumable_pass_is_one_write_job(spark, tmp_path, case, kwargs, want_jobs):
+def test_resumable_pass_is_one_write_job(
+    spark, tmp_path, jobs_started, case, kwargs, want_jobs
+):
     """Each pass runs exactly ONE Spark job, the write: the manifest's
     per-bucket rows are observed on it, not read back from the output,
     and equal the committed rows per bucket — including a bucket the
@@ -263,14 +265,9 @@ def test_resumable_pass_is_one_write_job(spark, tmp_path, case, kwargs, want_job
         "conv_id_dropped": lambda df: df.drop("conv_id"),
     }[case]
     out_dir = str(tmp_path / "out")
-    sc = spark.sparkContext
-    group = f"resumable-{case}"
-    sc.setJobGroup(group, group)
-    try:
-        done = run_resumable(t, transform, out_dir, n_buckets=4, **kwargs)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == want_jobs
+    before = jobs_started()
+    done = run_resumable(t, transform, out_dir, n_buckets=4, **kwargs)
+    assert jobs_started() - before == want_jobs
     committed = {
         r.bucket: r["count"]
         for r in read_resumable_output(spark, out_dir).groupBy("bucket").count().collect()

@@ -373,3 +373,50 @@ def test_dedup_paragraphs_one_generate_no_window(spark):
     plan = _plan(dedup_paragraphs(_docs(spark), ["doc_id"]))
     assert plan.count("Generate") == 1, plan[:3000]
     assert "Window" not in plan, plan[:3000]
+
+
+def test_dedup_builds_over_a_shuffle_start_no_job(spark, jobs_started):
+    """Building a dedup operator over a shuffled input starts no Spark
+    job: ``_ensure_parallelism`` decides from the plan, so the upstream
+    stages run once, in the real query, and not also while the plan is
+    built (asking an adaptive plan for its partition count runs them)."""
+    from oscar_tools_spark.operators.decontaminate import decontaminate
+    from oscar_tools_spark.operators.dedup import (
+        dedup_docs_exact,
+        dedup_minhash_lsh,
+        simhash_table,
+    )
+
+    docs = _docs(spark)
+
+    def grouped():  # a new frame each time: PySpark caches df.rdd
+        return docs.groupBy("doc_id").agg(F.max("text").alias("text"))
+
+    builds = {
+        "minhash_after_exact": lambda: dedup_minhash_lsh(
+            dedup_docs_exact(docs, ["doc_id"]), "doc_id"
+        ),
+        "simhash_table": lambda: simhash_table(grouped(), ["doc_id"]),
+        "decontaminate": lambda: decontaminate(
+            grouped(), docs.filter(F.col("doc_id") % 50 == 0), "doc_id"
+        ),
+    }
+    started = {}
+    for name, build in builds.items():
+        before = jobs_started()
+        build()
+        started[name] = jobs_started() - before
+    assert started == dict.fromkeys(builds, 0)
+
+
+def test_single_split_input_is_lifted_before_the_explode(spark):
+    """A narrow single-split input is still repartitioned round-robin to
+    ``defaultParallelism`` below the word explode, so the per-word work
+    runs on every core instead of one task."""
+    from oscar_tools_spark.operators.dedup import simhash_table
+
+    n = spark.sparkContext.defaultParallelism
+    plan = _plan(simhash_table(_docs(spark).coalesce(1), ["doc_id"]))
+    lift = f"RoundRobinPartitioning({n})"
+    assert lift in plan, plan[:3000]
+    assert plan.index("Generate") < plan.index(lift), plan[:3000]
