@@ -332,7 +332,7 @@ def langid_model_udf(score_batch=None):
 def identify_staged(
     df: DataFrame, text_col: str = "text", out_col: str = "identification"
 ) -> DataFrame:
-    """Expression langid as TWO projections: the per-language hit counts
+    """Expression langid in two stages: the per-language hit counts
     materialize into an int-array column, and the argmax/label/prob sit
     above it referencing only that array.
 
@@ -340,10 +340,21 @@ def identify_staged(
     subexpression elimination skips subtrees under conditional branches,
     and langid_expr's label/prob reference the best-hits struct 4x under
     ``when`` — each reference re-evaluates all 5 regex scans (measured
-    6.0s vs 1.6s for this staged shape at sf0.1/32 cores). CollapseProject
-    keeps the projections separate because the staged aliases are
-    non-cheap and referenced more than once, so each regex runs exactly
-    once per row. Output is bit-identical to ``langid_expr``.
+    6.0s vs 1.6s for this staged shape at sf0.1/32 cores). Output is
+    bit-identical to ``langid_expr`` on non-null text.
+
+    Why the hit array comes out of a generator, not a projection: a
+    filter on ``out_col`` (``lang.isin(...) & lang_prob >= t`` in the
+    WET ingest job) is pushed below every deterministic projection with
+    each alias inlined at each reference, which put 51 copies of the
+    combined scan, each over its own copy of the upstream text
+    expression, into that filter. A filter is never pushed through a
+    ``Generate`` with a conjunct that reads the generator's output, so
+    the one-row ``inline`` pins the scan: the combined regex runs
+    exactly once per row with or without a filter above, and conjuncts
+    that read only input columns still reach the scan. Trade-off: a
+    generator is never pruned, so a consumer that drops ``out_col``
+    unread still pays for the scan.
 
     r8: the five per-language alternation scans collapse into ONE
     combined scan + per-language membership counts
@@ -364,7 +375,9 @@ def identify_staged(
         F.regexp_extract_all(
             F.lower(text), F.lit(COMBINED_STOPWORD_PATTERN), 1
         ),
-    ).withColumn(tmp, _hits_from_matches(F.col(tmpm)))
+    ).select(
+        "*", F.inline(F.array(F.struct(_hits_from_matches(F.col(tmpm)).alias(tmp))))
+    )
     return staged.withColumn(out_col, _ident_from_hits(F.col(tmp))).drop(
         tmpm, tmp
     )
@@ -380,7 +393,7 @@ def identify(df: DataFrame, text_col: str = "text", out_col: str = "identificati
 def _ident_from_hits(h: Column) -> Column:
     """struct<label,prob> from an already-evaluated per-language
     hit-count array. ``h`` must be a cheap reference (a lambda variable
-    or a staged projection alias) — every regex scan happened upstream,
+    or a generator's output column) — every regex scan happened upstream,
     so the repeated references under ``when()`` here cost only array
     reads."""
     best = F.array_max(h)

@@ -135,8 +135,9 @@ def annotate_stage(df: DataFrame, cfg: CurationConfig, text_col: str = "text") -
             langid_mod.langid_model_udf(cfg.langid_score_batch)(text),
         )
     else:
-        # staged two-projection shape: the per-language regex counts run
-        # once per row instead of once per conditional reference
+        # staged shape: the combined stopword scan runs once per row
+        # instead of once per conditional reference, also under a
+        # filter on the identification
         out = langid_mod.identify_staged(out, text_col)
         if cfg.with_perplexity:
             out = out.withColumn(

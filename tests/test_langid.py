@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from oscar_tools_spark.functions.langid import (
@@ -88,6 +89,37 @@ def test_identify_staged_survives_lid_hits_collision(spark):
     rows = identify_staged(df).collect()
     assert rows[0]._lid_hits == "keepme"
     assert rows[0].identification.label == "en"
+
+
+@pytest.mark.parametrize(
+    "langs,threshold", [(["en", "de"], 0.5), (["und", "fr"], 0.0)], ids=["en_de", "und_fr"]
+)
+def test_identify_staged_under_filter_matches_langid_expr(spark, sf_dir, langs, threshold):
+    """A language filter above the staged path must keep the rows, and
+    the (label, prob) values, that the same filter keeps over the
+    unstaged expression."""
+    from oscar_tools_spark.functions.langid import identify_staged
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    edge = spark.createDataFrame(
+        [(-1, None), (-2, ""), (-3, "zzz qqq 12345 xyzzy")], "doc_id long, text string"
+    )
+    df = docs.unionByName(edge)
+
+    def kept(with_ident):
+        ident = F.col("identification")
+        return {
+            r.doc_id: (r.label, r.prob)
+            for r in with_ident.filter(
+                ident.label.isin(langs) & (ident.prob >= threshold)
+            )
+            .select("doc_id", "identification.label", "identification.prob")
+            .collect()
+        }
+
+    staged = kept(identify_staged(df))
+    assert staged == kept(df.withColumn("identification", langid_expr(F.col("text"))))
+    assert staged, "the filter kept no rows"
 
 
 def test_sentence_ids_match_doc_langid_per_line(spark):

@@ -8,6 +8,7 @@ cartesian joins) fail here long before a benchmark would notice.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from oscar_tools_spark.plans.pipeline import CurationConfig, curate
@@ -40,15 +41,56 @@ def test_expr_pipeline_is_python_free_and_exchange_free(spark):
     assert "Exchange" not in plan  # narrow scan->filter->project only
 
 
-def test_identify_staged_keeps_hits_projection_separate(spark):
-    """CollapseProject must NOT inline the hit-count array into its
-    consumers — inlining re-evaluates all stopword regex scans per
-    conditional reference (measured 4x the regex work)."""
-    from oscar_tools_spark.functions.langid import identify_staged
+def _nodes(plan):
+    """Every node of a JVM plan tree, root first."""
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i))
 
-    df = spark.createDataFrame([("the cat sat",)], "text string")
-    plan = _plan(identify_staged(df))
-    assert "_lid_hits" in plan  # alias survives as a real intermediate
+
+@pytest.mark.parametrize("filtered", ["none", "lang", "lang_and_length"])
+def test_identify_staged_keeps_hits_projection_separate(spark, filtered):
+    """The hit-count array must be evaluated once per row, not inlined
+    into its consumers: inlining re-evaluates the stopword scan per
+    conditional reference (measured 4x the regex work). Under the WET
+    ingest job's language filter the scan must still appear once in the
+    optimized plan (51 copies when the filter was pushed through the
+    staged projections), and a conjunct that reads only the input must
+    still reach the scan."""
+    from oscar_tools_spark.functions.langid import (
+        COMBINED_STOPWORD_PATTERN,
+        identify_staged,
+    )
+    from oscar_tools_spark.operators.normalize import normalize_text_expr
+
+    df = _docs(spark).withColumn("text", normalize_text_expr(F.col("text")))
+    out = identify_staged(df).withColumns(
+        {
+            "lang": F.col("identification.label"),
+            "lang_prob": F.col("identification.prob"),
+        }
+    )
+    if filtered != "none":
+        keep = F.col("lang").isin(["en", "de"]) & (F.col("lang_prob") >= 0.5)
+        if filtered == "lang_and_length":
+            keep = keep & (F.length("text") > 100)
+        out = out.filter(keep)
+    qe = out._jdf.queryExecution()
+    optimized = qe.optimizedPlan()
+    assert optimized.toString().count(COMBINED_STOPWORD_PATTERN[:60]) == 1
+    assert "_lid_hits" in qe.executedPlan().toString()  # a real intermediate
+    if filtered == "lang_and_length":
+        above_scan = [
+            n
+            for n in _nodes(optimized)
+            if n.nodeName() == "Filter"
+            and n.child().nodeName() == "LogicalRelation"
+        ]
+        assert len(above_scan) == 1, optimized.toString()[:3000]
+        condition = above_scan[0].condition().toString()
+        assert "length(" in condition
+        assert COMBINED_STOPWORD_PATTERN[:60] not in condition
 
 
 def test_sentence_ids_scans_each_line_once(spark):
