@@ -69,20 +69,28 @@ def cmd_extract_text(spark, args):
 
 
 def cmd_split(spark, args):
-    from .sinks.writer import split_records_for
+    from .sinks.writer import write_corpus
 
-    lines = _read_jsonl_lines(spark, args.src)
-    n = split_records_for(lines, args.size, text_col="line")
-    lines.select(F.col("line").alias("value")).write.mode("overwrite").option(
-        "maxRecordsPerFile", n
-    ).text(args.dst)
+    write_corpus(
+        _read_jsonl_lines(spark, args.src),
+        args.dst,
+        fmt="text",
+        split_mb=args.size,
+        compression="none",
+        text_col="line",
+    )
 
 
 def cmd_compress(spark, args):
-    lines = _read_jsonl_lines(spark, args.src)
-    lines.select(F.col("line").alias("value")).write.mode("overwrite").option(
-        "compression", args.codec
-    ).text(args.dst)
+    from .sinks.writer import write_corpus
+
+    write_corpus(
+        _read_jsonl_lines(spark, args.src),
+        args.dst,
+        fmt="text",
+        split_mb=None,
+        compression=args.codec,
+    )
 
 
 def cmd_checksum(spark, args):
@@ -95,7 +103,6 @@ def cmd_checksum(spark, args):
 
 def cmd_dedup(spark, args):
     from .operators.dedup import dedup_lines
-    from .sources.oscar_text import read_oscar_text
 
     # v1 corpus: the whole stream of lines (documents separated by
     # blanks) deduped first-occurrence-wins; reassemble the v1 layout.

@@ -49,7 +49,6 @@ import json
 import re
 from collections import Counter
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

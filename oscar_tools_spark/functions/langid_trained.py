@@ -278,18 +278,3 @@ def make_batch_scorer(model: dict):
         return score_lid_batch(list(texts), m)
 
     return _scorer
-
-
-def identify_trained(
-    df: DataFrame,
-    model: dict,
-    text_col: str = "text",
-    out_col: str = "identification",
-) -> DataFrame:
-    """`langid.identify` with the trained model through the same UDF
-    seam — one Arrow round-trip, no shuffle."""
-    from .langid import langid_model_udf
-
-    return df.withColumn(
-        out_col, langid_model_udf(make_batch_scorer(model))(F.col(text_col))
-    )

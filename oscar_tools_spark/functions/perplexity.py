@@ -21,7 +21,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .langid import _SEED_CORPUS
@@ -131,11 +131,6 @@ def perplexity_udf(score_batch=None):
 
 def score(df: DataFrame, text_col: str = "text", out_col: str = "perplexity") -> DataFrame:
     return df.withColumn(out_col, perplexity_udf()(F.col(text_col)))
-
-
-def high_perplexity_expr(ppl: Column, threshold: float = 30.0) -> Column:
-    """Quality gate: True when the text looks unlike natural language."""
-    return ppl > F.lit(threshold)
 
 
 def fit_char_bigram_lm(df: DataFrame, text_col: str = "text") -> np.ndarray:

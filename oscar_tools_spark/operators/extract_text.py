@@ -4,7 +4,7 @@ The reference streams each document's ``content`` followed by a blank
 line, producing the v1 text format (`/root/reference/src/ops/
 extract_text.rs:32-49` writes ``content + "\\n\\n"``). Here that is a
 pure projection (column select + concat) — Catalyst prunes every other
-column out of the scan — plus a writer that emits the v1 text layout.
+column out of the scan.
 """
 
 from __future__ import annotations
@@ -21,23 +21,3 @@ def extract_text(
         *[c for c in df.columns if c != text_col],
         F.concat(F.col(text_col), F.lit("\n\n")).alias(out_col),
     )
-
-
-def write_v1_text(
-    df: DataFrame,
-    path: str,
-    order_cols: list[str],
-    text_col: str = "text",
-    partitions: int | None = None,
-) -> None:
-    """Write the v1 plain-text corpus (documents separated by blank lines).
-
-    Order within each output file follows ``order_cols`` (range
-    partition + in-partition sort so file N's documents all precede
-    file N+1's — the distributed analog of the reference's sequential
-    append).
-    """
-    out = df.select(*order_cols, F.concat(F.col(text_col), F.lit("\n")).alias("value"))
-    if partitions:
-        out = out.repartitionByRange(partitions, *order_cols)
-    out.sortWithinPartitions(*order_cols).select("value").write.mode("overwrite").text(path)

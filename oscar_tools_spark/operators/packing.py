@@ -22,8 +22,6 @@ broadcast back onto the rows.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F

@@ -1,63 +1,15 @@
 """Corpus statistics: per-partition profiling of a curated corpus.
 
 The reference has no stats command; a 100 TB curation run needs one —
-tag distribution, per-language volumes, quality quantiles, PII-rule
-rates — to validate a run before committing it. One pass, one
-map-side-combinable aggregation per grouping.
+per-group length quantiles, score buckets and the rows-in/rows-out
+funnel — to validate a run before committing it. The per-language
+volume and tag profile is ``__spark_entry__.py::q_corpus_stats``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.annotations import annotations_expr
-from ..functions.langid import langid_label_expr
-from ..functions.lexicons import ALL_TAGS
-from ..functions.textstats import quality_score_expr, ws_token_count
-
-
-def corpus_stats(df: DataFrame, text_col: str = "text", lang_col: str | None = None) -> DataFrame:
-    """Per-language corpus profile: docs, chars, tokens, per-tag counts,
-    quality quantiles. ``lang_col`` defaults to the expression langid."""
-    text = F.col(text_col)
-    lang = F.col(lang_col) if lang_col else langid_label_expr(text)
-    ann = annotations_expr(text)
-    base = df.select(
-        lang.alias("lang"),
-        F.length(text).alias("chars"),
-        ws_token_count(text).alias("tokens"),
-        quality_score_expr(text).alias("quality"),
-        ann.alias("annotations"),
-    )
-    tag_counts = [
-        F.sum(
-            F.when(F.array_contains(F.coalesce(F.col("annotations"), F.array()), t), 1).otherwise(0)
-        ).alias(f"n_{t}")
-        for t in ALL_TAGS
-    ]
-    return (
-        base.groupBy("lang")
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum("chars").alias("chars"),
-            F.sum("tokens").alias("tokens"),
-            F.round(F.avg("quality"), 2).alias("avg_quality"),
-            F.percentile_approx("quality", [0.1, 0.5, 0.9]).alias("quality_p10_p50_p90"),
-            *tag_counts,
-        )
-        .orderBy("lang")
-    )
-
-
-def tag_histogram(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(tag, count) over the corpus, NULL tag = untagged docs."""
-    return (
-        df.select(F.explode_outer(annotations_expr(F.col(text_col))).alias("tag"))
-        .groupBy("tag")
-        .agg(F.count("*").alias("n"))
-        .orderBy("tag")
-    )
 
 
 def length_profile(

@@ -17,7 +17,7 @@ import hashlib
 import os
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -59,8 +59,3 @@ def write_checksum_manifests(spark: SparkSession, root: str, glob: str = "*") ->
                 f.write(f"{digest} {filename}\n")
         written.append(manifest)
     return written
-
-
-def row_sha384_expr(col: Column) -> Column:
-    """Row-level integrity column (table-world analog of file digests)."""
-    return F.sha2(col, 384)

@@ -58,25 +58,3 @@ def write_corpus(
     if partition_by:
         w = w.partitionBy(*partition_by)
     getattr(w, fmt)(path)
-
-
-def write_bucketed(
-    df,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 64,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed (hash-clustered) table write: later joins/aggregations on
-    ``bucket_cols`` read co-located buckets and skip the shuffle
-    entirely — the 100 TB path for repeated conv_id-keyed work
-    (conversation reassembly, cross-run diffs, incremental dedup).
-
-    Uses the session catalog (Hive-style managed table); on Iceberg the
-    equivalent is a ``bucket(n, col)`` partition transform.
-    """
-    w = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)

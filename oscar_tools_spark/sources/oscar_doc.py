@@ -7,8 +7,8 @@ One JSON document per line with ``content``, ``warc_headers``,
 the test fixture at :342-382). The reference parses each line with
 serde and DROPS malformed documents with a logged error, not a fatal
 (filter_tags.rs:160-169); here PERMISSIVE mode + ``_corrupt_record``
-reproduces that: corrupt rows are counted into lineage metrics and
-filtered out.
+reproduces that: corrupt rows are flagged in ``_corrupt_record`` and
+filtered out (``drop_corrupt=False`` keeps them for inspection).
 
 The explicit schema matters doubly at scale: no inference pass over
 100 TB, and Catalyst can prune unneeded nested fields from the parse.
@@ -79,11 +79,3 @@ def read_oscar_jsonl(
             F.col("_corrupt_record").isNull() & F.col("text").isNotNull()
         ).drop("_corrupt_record")
     return out
-
-
-def corrupt_count(spark: SparkSession, path: str) -> int:
-    """Lineage metric: how many lines the permissive parse rejected."""
-    df = read_oscar_jsonl(spark, path, drop_corrupt=False)
-    return df.filter(
-        F.col("_corrupt_record").isNotNull() | F.col("text").isNull()
-    ).count()

@@ -37,10 +37,3 @@ def read_oscar_text(spark: SparkSession, path: str) -> DataFrame:
     return docs.filter(F.trim(F.col("text")) != "").withColumn(
         "text", F.regexp_replace(F.col("text"), r"\n$", "")
     )
-
-
-def lang_of_path_expr(col=None):
-    """Language partition key from the reference's corpus layout
-    ``corpus/<lang>/<lang>_part_N.txt`` (checksum.rs:29,54-77)."""
-    c = col if col is not None else F.input_file_name()
-    return F.regexp_extract(c, r"/([a-z]{2,3})/[^/]+$", 1)

@@ -23,7 +23,6 @@ Contract notes (kept deliberately narrow):
 from __future__ import annotations
 
 import gzip
-from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 

@@ -1,5 +1,5 @@
 """Connected components, hamming simhash dedup, with-replacement
-sampling, corpus stats."""
+sampling."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from oscar_tools_spark.operators.components import connected_components, dedup_components
 from oscar_tools_spark.operators.dedup import dedup_simhash_hamming
 from oscar_tools_spark.operators.sampling import sample_by_budget_with_replacement
-from oscar_tools_spark.operators.stats import corpus_stats, tag_histogram
 
 
 def test_connected_components_chain(spark):
@@ -54,20 +53,6 @@ def test_sample_with_replacement_semantics(spark):
     # deterministic
     again = [r.doc_id for r in sample_by_budget_with_replacement(df, ["doc_id"], 600).collect()]
     assert ids == again
-
-
-def test_corpus_stats_and_histogram(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    stats = corpus_stats(docs, lang_col="lang").collect()
-    assert stats
-    total_docs = sum(r.docs for r in stats)
-    assert total_docs == docs.count()
-    r0 = stats[0]
-    assert r0.chars > 0 and r0.tokens > 0 and 0 <= r0.avg_quality <= 100
-    assert len(r0.quality_p10_p50_p90) == 3
-
-    hist = {r.tag: r.n for r in tag_histogram(docs).collect()}
-    assert sum(hist.values()) >= docs.count()
 
 
 def test_sample_per_group_budgets_are_independent(spark):

@@ -88,3 +88,69 @@ def test_no_nondeterministic_ordering_or_rng():
     for f in pkg.rglob("*.py"):
         found += offenders_in(f.read_text(), f.name)
     assert not found, f"nondeterministic construct found: {found}"
+
+
+def test_no_unused_imports():
+    """Every import in the package and the jobs is used. A module-level
+    import counts as used if any code in the module names it; an import
+    inside a function counts only if that function (or a closure in it)
+    names it. String annotations are read as code; ``__future__`` is
+    exempt. AST-based, so a name that only a docstring or comment
+    mentions does not count."""
+    import ast
+
+    scope_types = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+    def names_in(node) -> set[str]:
+        found = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                found.add(n.id)
+            # an argument, return or variable annotation; a string one
+            # ("np.ndarray") names what it parses to
+            ann = getattr(n, "annotation", None) or getattr(n, "returns", None)
+            for c in ast.walk(ann) if ann is not None else ():
+                if isinstance(c, ast.Constant) and isinstance(c.value, str):
+                    found |= names_in(ast.parse(c.value, mode="eval"))
+        return found
+
+    def unused_in(src: str, name: str) -> list[str]:
+        tree = ast.parse(src)
+        out = []
+
+        def visit(node, used):
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, scope_types):
+                    visit(child, names_in(child))
+                    continue
+                if isinstance(child, ast.ImportFrom) and child.module == "__future__":
+                    continue
+                if isinstance(child, (ast.Import, ast.ImportFrom)):
+                    for alias in child.names:
+                        if alias.name == "*":
+                            continue
+                        bound = alias.asname or alias.name.split(".")[0]
+                        if bound not in used:
+                            out.append(f"{name}:{child.lineno}:{bound}")
+                visit(child, used)
+
+        visit(tree, names_in(tree))
+        return out
+
+    # self-test: each scope rule, both ways
+    assert unused_in("import os\n", "x") == ["x:1:os"]
+    assert not unused_in("import os.path\nos.sep\n", "x")
+    assert not unused_in("from a import b as c\nc()\n", "x")
+    assert not unused_in('import numpy as np\ndef f() -> "np.ndarray": pass\n', "x")
+    assert not unused_in('import numpy as np\ndef f(a: "np.ndarray"): pass\n', "x")
+    assert not unused_in("from __future__ import annotations\n", "x")
+    assert unused_in('from a import b\n"""b"""\n', "x") == ["x:1:b"]
+    assert unused_in("def f():\n    import os\n\ndef g():\n    os.sep\n", "x") == ["x:2:os"]
+    assert not unused_in("def f():\n    import os\n    return lambda: os.sep\n", "x")
+    assert not unused_in("import os\ndef f():\n    return os.sep\n", "x")
+
+    found = []
+    for d in ("oscar_tools_spark", "jobs"):
+        for f in sorted((REPO / d).rglob("*.py")):
+            found += unused_in(f.read_text(), str(f.relative_to(REPO)))
+    assert not found, f"unused imports: {found}"

@@ -92,12 +92,15 @@ def test_identify_staged_survives_lid_hits_collision(spark):
 
 
 @pytest.mark.parametrize(
-    "langs,threshold", [(["en", "de"], 0.5), (["und", "fr"], 0.0)], ids=["en_de", "und_fr"]
+    "langs,threshold",
+    [(None, None), (["en", "de"], 0.5), (["und", "fr"], 0.0)],
+    ids=["unfiltered", "en_de", "und_fr"],
 )
 def test_identify_staged_under_filter_matches_langid_expr(spark, sf_dir, langs, threshold):
     """A language filter above the staged path must keep the rows, and
     the (label, prob) values, that the same filter keeps over the
-    unstaged expression."""
+    unstaged expression. Null text is unknown in both forms, like empty
+    text."""
     from oscar_tools_spark.functions.langid import identify_staged
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
@@ -108,18 +111,22 @@ def test_identify_staged_under_filter_matches_langid_expr(spark, sf_dir, langs, 
 
     def kept(with_ident):
         ident = F.col("identification")
-        return {
-            r.doc_id: (r.label, r.prob)
-            for r in with_ident.filter(
+        if langs is not None:
+            with_ident = with_ident.filter(
                 ident.label.isin(langs) & (ident.prob >= threshold)
             )
-            .select("doc_id", "identification.label", "identification.prob")
-            .collect()
+        return {
+            r.doc_id: (r.label, r.prob)
+            for r in with_ident.select(
+                "doc_id", "identification.label", "identification.prob"
+            ).collect()
         }
 
     staged = kept(identify_staged(df))
     assert staged == kept(df.withColumn("identification", langid_expr(F.col("text"))))
     assert staged, "the filter kept no rows"
+    if langs is None or "und" in langs:
+        assert staged[-1] == staged[-2] == ("und", 0.0)
 
 
 def test_sentence_ids_match_doc_langid_per_line(spark):

@@ -10,12 +10,12 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from oscar_tools_spark.datagen import gen_labeled_doc, synth_labeled_docs
-from oscar_tools_spark.functions.langid import langid_label_expr
+from oscar_tools_spark.functions.langid import identify_staged, langid_model_udf
 from oscar_tools_spark.functions.langid_trained import (
     fit_langid_classifier,
-    identify_trained,
     load_lid_model,
     make_batch_scorer,
     save_lid_model,
@@ -24,6 +24,14 @@ from oscar_tools_spark.functions.langid_trained import (
 
 N_DOCS = 1200
 CAP = 150  # per-class sample cap — a strict subset of each class
+
+
+def _identify(df, model):
+    """The trained model through the langid UDF seam, as the curate job
+    applies it."""
+    return df.withColumn(
+        "identification", langid_model_udf(make_batch_scorer(model))(F.col("text"))
+    )
 
 
 @pytest.fixture(scope="module")
@@ -39,10 +47,8 @@ def model(corpus):
 def test_accuracy_on_full_corpus_incl_zh(spark, corpus, model):
     """>=0.98 accuracy over ALL docs (training saw <=150/class), and zh
     — invisible to the Latin stopword heuristic — is fully covered."""
-    pred = identify_trained(corpus, model).select(
-        "lang",
-        "identification.label",
-        langid_label_expr("text").alias("heur"),
+    pred = _identify(identify_staged(corpus, out_col="heur"), model).select(
+        "lang", "identification.label", F.col("heur.label").alias("heur")
     )
     rows = pred.collect()
     acc = sum(r.lang == r.label for r in rows) / len(rows)
@@ -85,7 +91,7 @@ def test_distributed_equals_local_replay(spark, corpus, model):
     row-for-row — the scorer is a pure function of (text, model), so
     partitioning and batch composition must not leak in."""
     rows = (
-        identify_trained(corpus, model)
+        _identify(corpus, model)
         .select("doc_id", "text", "identification.label", "identification.prob")
         .orderBy("doc_id")
         .collect()
@@ -100,7 +106,7 @@ def test_empty_null_and_whitespace_are_unknown(spark, model):
     df = spark.createDataFrame(
         [(1, ""), (2, None), (3, "   \n\t ")], "doc_id bigint, text string"
     )
-    got = {r.doc_id: r for r in identify_trained(df, model).collect()}
+    got = {r.doc_id: r for r in _identify(df, model).collect()}
     # featureless inputs ('' / NULL / whitespace-only — _norm yields ''
     # so NO n-grams exist) must take the (unknown, 0.0) branch: through
     # the pipeline seam a language filter then drops them exactly like

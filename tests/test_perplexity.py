@@ -4,11 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from oscar_tools_spark.functions.perplexity import (
-    high_perplexity_expr,
-    score,
-    score_text,
-)
+from oscar_tools_spark.functions.perplexity import score, score_text
 
 
 def test_natural_text_scores_lower_than_noise():
@@ -46,7 +42,7 @@ def test_threshold_gate(spark):
     )
     rows = (
         score(df)
-        .withColumn("bad", high_perplexity_expr(F.col("perplexity")))
+        .withColumn("bad", F.col("perplexity") > 30.0)
         .collect()
     )
     assert rows[0].bad is False
